@@ -66,7 +66,7 @@ object Bench {
     * suppress the JSON line (the build numbers still print; missing query
     * metrics render as null). */
   final case class QueryMetrics(nFiles: Long, perQuery: Map[String, Double],
-    posT: Seq[(String, Double)], opsT: Seq[(String, Double)], tPruned: Double,
+    opsT: Seq[(String, Double)], tPruned: Double,
     tPrunedAuto: Double, p50: Double, structP50: Double, annRecall: Double,
     failed: Boolean = false)
 
@@ -479,18 +479,6 @@ object Bench {
     }
     val perQuery = latencies.groupBy(_._1).view
       .mapValues(v => median(v.map(_._2))).toMap
-    // both exact phrase plans, measured side by side: the production path
-    // above is gated (substring verify over candidates below PhraseGateDocs);
-    // these force the positional adjacency pre-filter at the same corpus so
-    // the crossover claim is a recorded number, not prose
-    val posQueries = Seq("phrase_pos" -> "\"hash join\"",
-      "bool_and_pos" -> "\"merge sort\" AND \"table scan\"")
-    posQueries.foreach { case (_, q) =>
-      eng.search(q, filesC, 10, forcePositional = true).collect() } // warm
-    val posT = posQueries.map { case (name, q) =>
-      name -> median((1 to 3).map(_ =>
-        timed(eng.search(q, filesC, 10, forcePositional = true).collect())._2))
-    }
     // same protocol as every other query metric: one warm pass (plan +
     // codegen), then median of 3
     // batch multi-query scoring: 3 queries, one index scan (same warm +
@@ -540,13 +528,13 @@ object Bench {
       else lshIds.intersect(bruteIds).size.toDouble / bruteIds.size
     filesC.unpersist()
     spark.stop()
-    QueryMetrics(nFiles, perQuery, posT, opsT, tPruned, tPrunedAuto,
+    QueryMetrics(nFiles, perQuery, opsT, tPruned, tPrunedAuto,
       p50, structP50, annRecall)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] query section failed (build numbers " +
         s"still print): $e")
       org.apache.spark.sql.SparkSession.getActiveSession.foreach(_.stop())
-      QueryMetrics(0L, Map.empty, Nil, Nil, Double.NaN, Double.NaN,
+      QueryMetrics(0L, Map.empty, Nil, Double.NaN, Double.NaN,
         Double.NaN, Double.NaN, Double.NaN, failed = true)
     }
 
@@ -623,7 +611,7 @@ object Bench {
     // peak in the MD table (labeled with its corpus) but out of the JSON.
     val peaksJson = peaks.filter { case (n, _) => n != nSmall && n != nLarge }
     val peakEntries = peaksJson.map { case (n, t) => s"index_build_n$n" -> t }
-    val qJson = (qm.perQuery.toSeq.sortBy(_._1) ++ qm.posT ++ qm.opsT ++ Seq(
+    val qJson = (qm.perQuery.toSeq.sortBy(_._1) ++ qm.opsT ++ Seq(
       "bm25_pruned" -> qm.tPruned,
       "bm25_pruned_auto" -> qm.tPrunedAuto,
       s"index_build_n$nSmall" -> tBuildSmall,
@@ -662,8 +650,6 @@ object Bench {
       s"| BM25 token-query top-10 p50 latency | ${fm(qm.p50)} s |",
       s"| structured (phrase/bool) query p50 latency | ${fm(qm.structP50)} s |") ++
       qm.perQuery.toSeq.sortBy(_._1).map { case (k, v) => s"| $k p50 | ${f(v)} s |" } ++
-      qm.posT.map { case (k, v) =>
-        s"| $k (positional adjacency plan forced at this corpus) | ${f(v)} s |" } ++
       Seq(s"| MaxScore-pruned token query (force=true: full adaptive machinery) | ${fm(qm.tPruned)} s |",
         s"| MaxScore-pruned token query (production: adaptive gate) | ${fm(qm.tPrunedAuto)} s |") ++
       qm.opsT.map { case (k, v) => s"| $k | ${f(v)} s |" } ++
@@ -698,10 +684,10 @@ object Bench {
          ||---|---|
          |${"@@ROWS@@"}
          |
-         |Adaptive-gate crossovers (phrase substring-vs-positional, pruned
-         |vs exhaustive) are measured separately on a 1.2M/4.8M/9.6M-doc
-         |ladder by `graft.GateBench` — see GATES.md / GATES.json for the
-         |numbers that set `PhraseGateDocs` (∞) and `PruneGateDocs` (64M).
+         |The adaptive prune-gate crossover (pruned vs exhaustive) is
+         |measured separately on a 1.2M/4.8M/9.6M-doc ladder by
+         |`graft.GateBench` — see GATES.md / GATES.json for the numbers that
+         |set `PruneGateDocs` (64M).
          |
          |## Method notes
          |

@@ -127,11 +127,6 @@ object BenchExtra {
     (tokenQueries ++ structQueries).foreach { case (name, q) =>
       measure(name, eng.search(q, filesC, 10))
     }
-    Seq("phrase_pos" -> "\"hash join\"",
-        "bool_and_pos" -> "\"merge sort\" AND \"table scan\"").foreach {
-      case (name, q) =>
-        measure(name, eng.search(q, filesC, 10, forcePositional = true))
-    }
     measure("op_batch_search", eng.searchMany(Seq(
       0L -> Seq("merge", "sort", "window"),
       1L -> Seq("dup", "stream"), 2L -> Seq("hash", "join"))))

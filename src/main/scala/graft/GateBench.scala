@@ -3,25 +3,20 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.checkpoint.CheckpointedBuild
 
-/** Measures the two adaptive-gate crossovers at their design points
-  * (VERDICT r2 #3): the gates `PhraseGateDocs` and `PruneGateDocs` route
-  * between two exact plans on corpus size, and until round 3 their 10M
-  * defaults were extrapolations from a 60k-doc measurement.
+/** Measures the adaptive prune-gate crossover at its design point
+  * (VERDICT r2 #3): the gate `PruneGateDocs` routes between two exact
+  * plans on corpus size, and until round 3 its 10M default was an
+  * extrapolation from a 60k-doc measurement.
   *
-  * For a ladder of corpus sizes up to just below the gates this job
-  * measures, per size:
-  *  - phrase + boolean-AND through the SUBSTRING plan (auto path below the
-  *    gate: conjunctive candidates, then a raw-substring verify over
-  *    candidate content) vs the POSITIONAL plan (forcePositional: adjacency
-  *    pre-filter over query-term postings before the same verify),
-  *  - token top-k through the EXHAUSTIVE plan (searchTopK) vs the PRUNED
-  *    plan (searchPruned force=true: MaxScore + block-max WAND, 3 driver
-  *    round-trips).
+  * For a ladder of corpus sizes this job measures, per size, token top-k
+  * through the EXHAUSTIVE plan (searchTopK) vs the PRUNED plan
+  * (searchPruned force=true: MaxScore + block-max WAND, 3 driver
+  * round-trips).
   *
   * One warm pass then median of 3 per cell, like Bench. Each size's corpus,
   * checkpoint and index are deleted before the next (the 9.6M corpus alone
-  * is ~34 GB). Prints one JSON line; results are recorded in BENCH.md and
-  * justify (or adjust) the gate defaults in CompressedSearchEngine.
+  * is ~34 GB). Prints one JSON line; results are recorded in GATES.md and
+  * justify (or adjust) the gate default in CompressedSearchEngine.
   */
 object GateBench {
 
@@ -50,19 +45,10 @@ object GateBench {
     val results = sizes.map { size =>
       val base = s"/tmp/graft_gate_$size"
       rmrf(base); rmrf(s"$base-corpus")
-      val (files, n) = IndexBuildJob.corpusOf(spark, sfDir, size)
-      require(n < search.CompressedSearchEngine.PhraseGateDocs,
-        s"size $n is above the phrase gate — the auto path would not be the substring plan")
+      val (files, _) = IndexBuildJob.corpusOf(spark, sfDir, size)
       val tBuild = timed(CheckpointedBuild.run(files, base, nBuckets = 4))
       val eng = CheckpointedBuild.load(spark, base)
       val cells = Seq(
-        "phrase_sub" -> med3(eng.search("\"hash join\"", files, 10).collect()),
-        "phrase_pos" -> med3(eng.search("\"hash join\"", files, 10,
-          forcePositional = true).collect()),
-        "bool_and_sub" -> med3(eng.search("\"merge sort\" AND \"table scan\"",
-          files, 10).collect()),
-        "bool_and_pos" -> med3(eng.search("\"merge sort\" AND \"table scan\"",
-          files, 10, forcePositional = true).collect()),
         "topk_exhaustive" -> med3(
           eng.searchTopK(Seq("merge", "sort", "window"), 10).collect()),
         "topk_pruned" -> med3(eng.searchPruned(Seq("merge", "sort", "window"),

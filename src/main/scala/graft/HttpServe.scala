@@ -78,7 +78,7 @@ object HttpServe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
     val ckptDir = args.lift(2).getOrElse(
-      s"/tmp/graft_serve_v3_${sfDir.replaceAll("[^a-zA-Z0-9]", "_")}")
+      s"/tmp/graft_serve_v4_${sfDir.replaceAll("[^a-zA-Z0-9]", "_")}")
     val spark = GraftSession.builder("graft-http-serve",
       Runtime.getRuntime.availableProcessors()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

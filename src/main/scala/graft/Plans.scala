@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
 import graft.corpus.Corpus
 import graft.index.{IndexTables, InvertedIndex}
-import graft.search.{CompressedSearchEngine, SearchEngine}
+import graft.search.CompressedSearchEngine
 
 /** Dumps `explain("formatted")` for the load-bearing physical plans into
   * PLANS.md — the audit trail that the plans are the ones a 1000-executor
@@ -29,7 +29,6 @@ object Plans {
 
     val files = Corpus.files(spark, sfDir)
     val t = IndexTables.build(files)
-    val eng = new SearchEngine(t)
     val toksP = graft.index.Stats.postings(files)
     val idx = InvertedIndex.build(toksP, t.nDocs, t.avgdl)
     // write + re-read so the query plans show the real parquet scan
@@ -44,20 +43,17 @@ object Plans {
           "a pruned `ReadSchema` (only doc_id/lang/text reach the scan).",
         Corpus.documents(spark, sfDir)
           .filter(col("lang") === "scala").select("doc_id", "lang", "text")),
-      ("Flagship BM25 token query (uncompressed tables)",
-        "Expect: broadcast of the tiny query-term side into the postings " +
-          "join, hash partial+final aggregation for the per-doc score sum, " +
-          "and `TakeOrderedAndProject` for top-k (no global sort).",
-        eng.search("merge sort window")),
+      ("Served BM25 token query (top-k + display hydration)",
+        "Expect: the index scan with `PushedFilters: [In(term, …)]`, hash " +
+          "partial+final aggregation for the per-doc score sum, " +
+          "`TakeOrderedAndProject` for top-k (no global sort), and the k-row " +
+          "top-k broadcast into the display-column scan of the corpus.",
+        Serve.hydrate(ceng.search("merge sort window", files), files)),
       ("BM25 over the compressed block-max index",
         "Expect: parquet scan of the index with `PushedFilters: [In(term, …)]` " +
           "(term-range file pruning via min/max stats), generate/explode of " +
           "decoded postings, hash agg, `TakeOrderedAndProject`.",
         ceng.searchTopK(Seq("merge", "sort", "window"))),
-      ("Boolean query candidates (AND of two phrases)",
-        "Expect: left-semi joins for candidate membership; no full " +
-          "materialization of either candidate set.",
-        eng.search("\"hash join\" AND \"merge sort\"")),
       ("Boolean query over the compressed engine (shared verify scan)",
         "Expect: ONE scan of the corpus parquet — both phrases' candidate " +
           "sets union with membership flags (doc_id-scale rows), content is " +
@@ -75,9 +71,9 @@ object Plans {
         ceng.search("\"hash join\" AND \"merge sort\"", files)),
       ("Index build stage 1: salted segment runs",
         "Expect: ONE fused tokenize+compact eval per document (a single " +
-          "graft_compact_tokens — tf, len, and wire-encoded positions ride " +
-          "in the posting row, so there is NO docstats join, no per-token " +
-          "rows, and no map-side sort) and a single `Exchange " +
+          "graft_compact_tokens — tf and len ride in the posting row, so " +
+          "there is NO docstats join, no per-token rows, and no map-side " +
+          "sort) and a single `Exchange " +
           "hashpartitioning(term, salt)` feeding an in-partition sort + " +
           "MapPartitions (the streaming var-byte segment encoder).",
         InvertedIndex.segments(toksP, t.nDocs)),
@@ -90,15 +86,6 @@ object Plans {
           "no per-term aggregate buffers).",
         InvertedIndex.mergeSegments(
           InvertedIndex.segments(toksP, t.nDocs), t.avgdl)),
-      ("Phrase adjacency pre-filter (positional postings)",
-        "Expect: `PushedFilters: [In(term, …)]` on the index scan, decode of " +
-          "postings+positions fused with explode, union of slot occurrence " +
-          "rows SEMI-JOINED on the conjunctive candidate set before the hash " +
-          "aggregation on (doc_id, start) — shuffle volume is candidates × " +
-          "query-term occurrences, never corpus-wide occurrences and never " +
-          "candidate content.",
-        ceng.adjacencyCandidates(Seq("merge", "sort"),
-          ceng.candidatesAll(Seq("merge", "sort"))).get),
       ("Batch multi-query search (offline query replay)",
         "Expect: ONE index parquet scan with `PushedFilters: [In(term, …)]` " +
           "covering the whole batch's terms, the (qid, term) queries table " +

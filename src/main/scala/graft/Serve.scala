@@ -12,11 +12,10 @@ import graft.search.QueryLog
   *
   * What "long-lived" buys and what this entry exercises: the published index
   * is loaded ONCE (parquet scans served from the persisted engine DataFrame),
-  * the phrase-expansion term dictionary is materialized once and cached
-  * across queries (CompressedSearchEngine.termDict), the display corpus is
-  * persisted once — per-query work is only the query's own plan. Every
-  * query is appended to the query log (S10), so `:suggest` reflects the
-  * session's history like the reference's suggestion endpoint.
+  * the display corpus is persisted once — per-query work is only the
+  * query's own plan. Every query is appended to the query log (S10), so
+  * `:suggest` reflects the session's history like the reference's
+  * suggestion endpoint.
   *
   * Protocol (one request per line, one JSON line per result row):
   *   <query>                 top-10 BM25 (tokens / "phrase" / boolean)
@@ -43,27 +42,26 @@ object Serve {
     sb.append('"').toString
   }
 
+  /** J2/J3 hydrate AFTER top-k: display columns only for the result page. */
+  def hydrate(topk: DataFrame, files: DataFrame): DataFrame =
+    topk.join(files.select("doc_id", "repo", "path", "lang"), Seq("doc_id"))
+      .orderBy(col("score").desc, col("doc_id").asc)
+
   /** One warm serving session over a published checkpoint dir. */
   final class Session(spark: SparkSession, ckptDir: String, corpus: DataFrame,
                       logPath: String) {
     val engine: graft.search.CompressedSearchEngine =
       CheckpointedBuild.load(spark, ckptDir)
     private val files = corpus.persist()
-    private val display = files.select("doc_id", "repo", "path", "lang")
-
-    /** J2/J3 hydrate AFTER top-k: content columns only for the result page. */
-    private def hydrate(topk: DataFrame): DataFrame =
-      topk.join(display, Seq("doc_id"))
-        .orderBy(col("score").desc, col("doc_id").asc)
 
     def query(raw: String, k: Int = 10): DataFrame = {
       QueryLog.append(spark, logPath, Seq(raw))
-      hydrate(engine.search(raw, files, k))
+      hydrate(engine.search(raw, files, k), files)
     }
 
     def page(raw: String, page: Int, limit: Int): DataFrame = {
       QueryLog.append(spark, logPath, Seq(raw))
-      hydrate(engine.searchPage(raw, files, page, limit))
+      hydrate(engine.searchPage(raw, files, page, limit), files)
     }
 
     def suggest(prefix: String): DataFrame =
@@ -102,7 +100,7 @@ object Serve {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val ckptDir = args.lift(1).getOrElse(
-      s"/tmp/graft_serve_v3_${sfDir.replaceAll("[^a-zA-Z0-9]", "_")}")
+      s"/tmp/graft_serve_v4_${sfDir.replaceAll("[^a-zA-Z0-9]", "_")}")
     val spark = GraftSession.builder("graft-serve",
       Runtime.getRuntime.availableProcessors()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
-import graft.index.{IndexTables, InvertedIndex}
-import graft.search.{CompressedSearchEngine, SearchEngine}
+import graft.index.IndexTables
+import graft.search.CompressedSearchEngine
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -18,21 +18,26 @@ object SparkEntry {
   private def tables(s: SparkSession, dir: String): IndexTables =
     IndexTables.build(Corpus.files(s, dir))
 
-  private def eng(s: SparkSession, dir: String): SearchEngine =
-    new SearchEngine(tables(s, dir))
-
-  private def cengFrom(t: IndexTables): CompressedSearchEngine = {
-    val idx = InvertedIndex.build(graft.index.Stats.postings(t.files),
-      t.nDocs, t.avgdl)
-    new CompressedSearchEngine(idx, t.nDocs, t.avgdl)
+  /** The serving engine (in-memory index) over an sf dir's corpus, and
+    * that corpus. */
+  private def served(s: SparkSession, dir: String,
+                     analyzer: String = "simple"): (CompressedSearchEngine, DataFrame) = {
+    val files = Corpus.files(s, dir)
+    (CompressedSearchEngine.inMemory(files, analyzer), files)
   }
 
   private def ceng(s: SparkSession, dir: String): CompressedSearchEngine =
-    cengFrom(tables(s, dir))
+    served(s, dir)._1
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
-    eng(spark, "/root/testdata/sf0.001").searchDisplay("merge sort window")
+  def entry(spark: SparkSession): DataFrame = {
+    val (e, files) = served(spark, "/root/testdata/sf0.001")
+    Serve.hydrate(e.search("merge sort window", files), files)
+  }
+
+  /** A query through the serving engine's full lifecycle. */
+  private def engineQuery(q: String): (SparkSession, String) => DataFrame =
+    (s, dir) => { val (e, files) = served(s, dir); e.search(q, files) }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -56,28 +61,22 @@ object SparkEntry {
     }),
     // E5 conjunctive candidates
     "q_candidates_all" -> ((s, dir) =>
-      eng(s, dir).candidatesAll(Seq("hash", "join")).orderBy("doc_id")),
+      ceng(s, dir).candidatesAll(Seq("hash", "join")).orderBy("doc_id")),
     // E4 disjunctive candidates
     "q_candidates_any" -> ((s, dir) =>
-      eng(s, dir).candidatesAny(Seq("dup", "vector")).orderBy("doc_id")),
+      ceng(s, dir).candidatesAny(Seq("dup", "vector")).orderBy("doc_id")),
     // §3.1 flagship: multi-term BM25 top-10
-    "q_bm25_tokens" -> ((s, dir) =>
-      eng(s, dir).search("merge sort window")),
+    "q_bm25_tokens" -> engineQuery("merge sort window"),
     // rare+common term mix
-    "q_bm25_rare" -> ((s, dir) =>
-      eng(s, dir).search("dup stream")),
+    "q_bm25_rare" -> engineQuery("dup stream"),
     // P4 phrase semantics (conjunctive candidates + raw substring filter)
-    "q_phrase" -> ((s, dir) =>
-      eng(s, dir).search("\"hash join\"")),
+    "q_phrase" -> engineQuery("\"hash join\""),
     // E1 AND over phrase-filtered sets
-    "q_bool_and" -> ((s, dir) =>
-      eng(s, dir).search("\"merge sort\" AND \"table scan\"")),
+    "q_bool_and" -> engineQuery("\"merge sort\" AND \"table scan\""),
     // E2 OR
-    "q_bool_or" -> ((s, dir) =>
-      eng(s, dir).search("\"batch batch\" OR \"window agg\"")),
+    "q_bool_or" -> engineQuery("\"batch batch\" OR \"window agg\""),
     // E3 NOT
-    "q_bool_not" -> ((s, dir) =>
-      eng(s, dir).search("\"sort merge\" NOT \"hash join\"")),
+    "q_bool_not" -> engineQuery("\"sort merge\" NOT \"hash join\""),
     // A2 + §2.11: delta-gap varbyte posting codec — encode∘decode = id
     "q_index_roundtrip" -> ((s, dir) =>
       ceng(s, dir).decoded(None).orderBy("term", "doc_id")),
@@ -87,7 +86,7 @@ object SparkEntry {
         .agg(first(col("df")).as("df"),
           sum(size(col("blocks"))).cast("long").as("nblocks"))
         .orderBy("term")),
-    // BM25 over the compressed index — must equal the uncompressed path
+    // exhaustive BM25 over the compressed index, scoring terms given directly
     "q_bm25_compressed" -> ((s, dir) =>
       ceng(s, dir).searchTopK(Seq("merge", "sort", "window"))),
     // MaxScore/block-range pruned top-k — rank-identical to exhaustive
@@ -100,28 +99,10 @@ object SparkEntry {
         0L -> Seq("merge", "sort", "window"),
         1L -> Seq("dup", "stream"),
         2L -> Seq("hash", "join")))),
-    // positional payload roundtrip: decode(encode(positions)) == posexplode
-    "q_positions" -> ((s, dir) =>
-      ceng(s, dir).occurrencesAll()
-        .select(col("term"), col("doc_id"), col("pos").cast("long").as("pos"))
-        .orderBy("term", "doc_id", "pos")),
-    // P4 phrase over the compressed index WITH the positional adjacency
-    // pre-filter forced on (the sf0.01 corpus is below the phrase gate) —
-    // must hash-match the plain substring-semantics oracle
-    "q_phrase_pos" -> ((s, dir) => {
-      val t = tables(s, dir)
-      cengFrom(t).search("\"hash join\"", t.files, forcePositional = true)
-    }),
-    // E1 boolean AND through the same positional phrase path
-    "q_bool_and_pos" -> ((s, dir) => {
-      val t = tables(s, dir)
-      cengFrom(t).search("\"merge sort\" AND \"table scan\"", t.files,
-        forcePositional = true)
-    }),
     // S7 checkpointed build + resume: full bucketed pipeline with lineage
     // manifests, then query the published index
     "q_bm25_checkpointed" -> ((s, dir) => {
-      val out = s"/tmp/graft_ckpt_v3_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val out = s"/tmp/graft_ckpt_v4_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
       graft.checkpoint.CheckpointedBuild.run(Corpus.files(s, dir), out, nBuckets = 4)
       graft.checkpoint.CheckpointedBuild.load(s, out)
         .searchTopK(Seq("merge", "sort", "window"))
@@ -133,7 +114,7 @@ object SparkEntry {
     // manifests in CheckpointedBuildSpec); the merged index must equal a
     // fresh full build, certified here by the full-corpus BM25 oracle
     "q_bm25_incremental" -> ((s, dir) => {
-      val out = s"/tmp/graft_ckpt_v3_incr_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val out = s"/tmp/graft_ckpt_v4_incr_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       val files = Corpus.files(s, dir)
       val b = files.agg(min("doc_id"), max("doc_id")).head()
@@ -158,7 +139,7 @@ object SparkEntry {
       val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val src = s"/tmp/graft_stream_ingest_src_$tag"
       val store = s"/tmp/graft_stream_ingest_store_$tag"
-      val out = s"/tmp/graft_ckpt_v3_stream_$tag"
+      val out = s"/tmp/graft_ckpt_v4_stream_$tag"
       Seq(src, store, out).foreach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
       val files = Corpus.files(s, dir)
@@ -236,26 +217,28 @@ object SparkEntry {
       search.QueryLog.suggest(search.QueryLog.replay(s,
         s"/tmp/graft_querylog_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"), "s")),
     // O2: pagination — page 2 of 3-per-page over the flagship query
-    "q_paged" -> ((s, dir) =>
-      eng(s, dir).searchPage("merge sort window", page = 2, limit = 3)),
+    "q_paged" -> ((s, dir) => {
+      val (e, files) = served(s, dir)
+      e.searchPage("merge sort window", files, page = 2, limit = 3)
+    }),
     // F13: paragraph snippets for the flagship query's result page
     // (first matching newline block, 100-word truncation, whole-doc fallback)
     "q_snippets" -> ((s, dir) => {
-      val e = eng(s, dir)
-      search.Extras.withSnippets(e.search("merge sort window"),
-        e.t.files, "merge sort window")
+      val (e, files) = served(s, dir)
+      search.Extras.withSnippets(e.search("merge sort window", files),
+        files, "merge sort window")
     }),
     // F13 boolean path: paragraph must satisfy the AND of both phrases
     "q_snippets_bool" -> ((s, dir) => {
-      val e = eng(s, dir)
+      val (e, files) = served(s, dir)
       val q = "\"merge sort\" AND \"table scan\""
-      search.Extras.withSnippets(e.search(q), e.t.files, q)
+      search.Extras.withSnippets(e.search(q, files), files, q)
     }),
     // F12: phrase occurrence counts over phrase candidates
     "q_phrase_count" -> ((s, dir) => {
-      val e = eng(s, dir)
-      search.Extras.phraseCounts(e.phraseCandidates("hash join"),
-        e.t.files, "hash join")
+      val (e, files) = served(s, dir)
+      search.Extras.phraseCounts(e.phraseCandidates("hash join", files),
+        files, "hash join")
     }),
     // code-aware analyzer (identifier/camelCase/snake subtokens + Porter
     // stem): DuckDB-oracled via a generated pure-SQL Porter stemmer
@@ -264,9 +247,10 @@ object SparkEntry {
     "q_tf_code" -> ((s, dir) =>
       IndexTables.build(Corpus.files(s, dir), "code").tf
         .orderBy("doc_id", "term")),
-    "q_bm25_code" -> ((s, dir) =>
-      new SearchEngine(IndexTables.build(Corpus.files(s, dir), "code"), "code")
-        .search("merge sort window"))
+    "q_bm25_code" -> ((s, dir) => {
+      val (e, files) = served(s, dir, "code")
+      e.search("merge sort window", files, analyzer = "code")
+    })
   )
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
@@ -357,25 +341,6 @@ object SparkEntry {
         1 -> Seq("dup", "stream"),
         2 -> Seq("hash", "join"))),
       "q_bm25_pruned" -> bm25(Seq("merge", "sort", "window"), Nil, None),
-      "q_positions" ->
-        s"""WITH ${b.filesCte},
-           |w AS (
-           |  SELECT doc_id,
-           |         list_filter(string_split_regex(lower(content), '[^a-z0-9]+'),
-           |                     x -> x <> '') AS toks
-           |  FROM files
-           |),
-           |occ AS (
-           |  SELECT doc_id, unnest(toks) AS term, unnest(range(len(toks))) AS pos
-           |  FROM w
-           |)
-           |SELECT doc_id, term, CAST(pos AS BIGINT) AS pos FROM occ
-           |ORDER BY term, doc_id, pos""".stripMargin,
-      "q_phrase_pos" -> bm25(Seq("hash", "join"),
-        Seq(b.phraseCte("phr", Seq("hash", "join"), "hash join")), Some("phr")),
-      "q_bool_and_pos" -> boolQ(Seq("merge", "sort"), "merge sort",
-        Seq("table", "scan"), "table scan", "INTERSECT",
-        Seq("merge", "sort", "table", "scan")),
       "q_bm25_checkpointed" -> bm25(Seq("merge", "sort", "window"), Nil, None),
       "q_bm25_incremental" -> bm25(Seq("merge", "sort", "window"), Nil, None),
       "q_bm25_streamed" -> bm25(Seq("merge", "sort", "window"), Nil, None),

@@ -239,13 +239,12 @@ object CheckpointedBuild {
           sum(when(sha2(col("content"), 256) === col("sha"), 1L).otherwise(0L)).as("sha_ok"),
           bit_xor(xxhash64(col("doc_id"), col("sha"))).as("snap"))
         // ONE job per bucket, ONE fused tokenize+compact eval per document,
-        // ONE wide exchange: the compact posting stream carries tf, len, and
-        // wire-encoded positions in-row (no docstats join, no second
-        // tokenize, no map-side sort) and feeds the salted segment shuffle
-        // directly. Token/doc metrics are observed ON the same stream
-        // (tokens = Σ tf; docs_tok counts the idx==0 entry each tokenized
-        // doc has exactly once), so no extra action runs; avgdl comes from
-        // these observed sums.
+        // ONE wide exchange: the compact posting stream carries tf and len
+        // in-row (no docstats join, no second tokenize, no map-side sort)
+        // and feeds the salted segment shuffle directly. Token/doc metrics
+        // are observed ON the same stream (tokens = Σ tf; docs_tok counts
+        // the idx==0 entry each tokenized doc has exactly once), so no extra
+        // action runs; avgdl comes from these observed sums.
         val dsObs = Observation(s"ds-$b")
         val toksP = Stats.postings(observed, analyzer)
           .observe(dsObs,
@@ -256,7 +255,7 @@ object CheckpointedBuild {
         val seg = InvertedIndex
           .segments(toksP, nDocs = math.max(1L, width), saltBuckets)
           .observe(segObs, count(lit(1)).as("groups"),
-            sum(length(col("seg")) + length(col("pos"))).as("bytes"),
+            sum(length(col("seg"))).as("bytes"),
             sum(col("n")).as("postings"))
         io.overwrite(seg, s"$outDir/segments/bucket=$b")
         val m = obs.get
@@ -326,8 +325,7 @@ object CheckpointedBuild {
     val nDocs = ms.map(_.rows).sum
     val docsTok = math.max(1L, ms.map(_.docsTok).sum)
     val avgdl = ms.map(_.tokens).sum.toDouble / docsTok
-    val index = InvertedIndex.mergeSegments(
-      segAll.select("term", "seg", "pos", "n"), avgdl)
+    val index = InvertedIndex.mergeSegments(segAll, avgdl)
     // Output partition count from the manifests' byte sums (segment bytes ≈
     // final payload bytes: the merge byte-concatenates the same streams) —
     // free metadata, so the write path needs no persist and no byte agg

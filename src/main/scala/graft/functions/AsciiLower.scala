@@ -189,8 +189,6 @@ object GraftFunctions {
   val AsciiContainsName = "graft_ascii_contains"
   val CompactTokensName = "graft_compact_tokens"
   val DecodePostingsName = "graft_decode_postings"
-  val DecodePositionsName = "graft_decode_positions"
-  val DecodeDocPositionsName = "graft_decode_doc_positions"
   val DecodeBlocksName = "graft_decode_blocks"
   val CosineSimName = "graft_cosine"
   val SignBucketName = "graft_sign_bucket"
@@ -221,11 +219,6 @@ object GraftFunctions {
       CompactTokensName, exprs => CompactTokens(exprs.head), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       DecodePostingsName, exprs => DecodePostings(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DecodePositionsName, exprs => DecodePositions(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DecodeDocPositionsName,
-      exprs => DecodeDocPositions(exprs(0), exprs(1)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       DecodeBlocksName,
       exprs => DecodePostingsBlocks(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4)),
@@ -267,21 +260,11 @@ object GraftFunctions {
     call_function(FingerprintName, text)
 
   /** `graft_compact_tokens(c)`: fused tokenize + per-doc posting compaction
-    * → array<struct<term, tf, len, pos>> (see [[CompactTokens]]). */
+    * → array<struct<term, tf, len>> (see [[CompactTokens]]). */
   def compactTokens(c: Column): Column = call_function(CompactTokensName, c)
 
   /** `graft_decode_postings(c)`: var-byte chunk → array<struct<doc_id,tf,len>>. */
   def decodePostings(c: Column): Column = call_function(DecodePostingsName, c)
-
-  /** `graft_decode_positions(postings, positions)`: occurrence rows
-    * array<struct<doc_id, pos>>. */
-  def decodePositions(postings: Column, positions: Column): Column =
-    call_function(DecodePositionsName, postings, positions)
-
-  /** `graft_decode_doc_positions(postings, positions)`: posting-granular
-    * rows array<struct<doc_id, ps: array<int>>> (see DecodeDocPositions). */
-  def decodeDocPositions(postings: Column, positions: Column): Column =
-    call_function(DecodeDocPositionsName, postings, positions)
 
   /** `graft_decode_blocks(postings, blocks, lo, hi, minw)`: block-selective
     * decode — only blocks intersecting [lo, hi] with max_weight ≥ minw. */

@@ -7,35 +7,31 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.index.PostingCodec
 
 /** One compacted posting entry of a single document, produced doc-at-a-time
   * by [[CompactTokens]] (or [[CompactTokens.fromTokens]] for the code
-  * analyzer): `pos` is the final positions wire record — vint(tf) followed
-  * by delta varints of the 0-based token positions (prev = -1) — which every
-  * later build stage byte-copies, never re-encodes. */
-final case class TermEntry(term: String, tf: Int, len: Int, pos: Array[Byte])
+  * analyzer): the term, its in-document frequency and the document's token
+  * count. */
+final case class TermEntry(term: String, tf: Int, len: Int)
 
 /** Fused tokenize → per-document posting compaction as ONE codegen'd
-  * Catalyst expression: `content → array<struct<term, tf, len, pos>>`, one
-  * entry per DISTINCT term of the document, positions already in wire
-  * format.
+  * Catalyst expression: `content → array<struct<term, tf, len>>`, one entry
+  * per DISTINCT term of the document.
   *
   * This is the build's map side collapsed to a single expression eval per
   * document. The previous shape — tokenize, `posexplode` one row per token,
   * `sortWithinPartitions(doc_id, term, pos)`, then a linear-scan compactor —
   * materialized one UnsafeRow per TOKEN and paid an O(T log T) in-partition
-  * sort before the compaction could fold tf/positions. Telemetry at 480k
-  * files showed that map stage was ~80% of single-core build wall. Here the
-  * per-doc aggregation is a linear scan over the content bytes with one
-  * small hash map per document (bounded by the doc's distinct-term count,
-  * dead after the eval — no sort, no per-token rows), and the output
-  * explodes straight into the (term, salt) shuffle write.
+  * sort before the compaction could fold tf. Telemetry at 480k files showed
+  * that map stage was ~80% of single-core build wall. Here the per-doc
+  * aggregation is a linear scan over the content bytes with one small hash
+  * map per document (bounded by the doc's distinct-term count, dead after
+  * the eval — no sort, no per-token rows), and the output explodes straight
+  * into the (term, salt) shuffle write.
   *
   * Tokenization is byte-identical to [[AsciiTokens]] (maximal `[A-Za-z0-9]+`
   * runs, ASCII-lowercased — reference `Utils/Utils.java:14` semantics);
-  * `PhrasePositionalSpec` cross-validates the fused output against the
-  * per-token `Stats.tokensPos` path.
+  * `CompactTokensSpec` cross-validates the fused output against it.
   */
 case class CompactTokens(child: Expression) extends UnaryExpression {
   override def dataType: DataType = CompactTokens.schema
@@ -54,30 +50,21 @@ object CompactTokens {
   val schema: DataType = ArrayType(StructType(Seq(
     StructField("term", StringType, nullable = false),
     StructField("tf", IntegerType, nullable = false),
-    StructField("len", IntegerType, nullable = false),
-    StructField("pos", BinaryType, nullable = false))), containsNull = false)
+    StructField("len", IntegerType, nullable = false))), containsNull = false)
 
-  /** Growable int list for a term's position stream. */
-  private final class IntVec {
-    var a = new Array[Int](4)
-    var n = 0
-    def add(v: Int): Unit = {
-      if (n == a.length) a = java.util.Arrays.copyOf(a, a.length * 2)
-      a(n) = v
-      n += 1
-    }
-  }
+  /** Mutable per-term counter (no boxing on the hot path). */
+  private final class Count { var n = 0 }
 
   @inline private def isAlnum(b: Byte): Boolean =
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
 
-  /** Static helper invoked from generated code: one linear pass collecting
-    * per-term ascending positions, then one encode pass. Entry order is the
-    * document's term first-occurrence order (deterministic; downstream
-    * re-sorts by (term, salt, doc_id) anyway). */
+  /** Static helper invoked from generated code: one linear pass counting
+    * per-term occurrences. Entry order is the document's term
+    * first-occurrence order (deterministic; downstream re-sorts by
+    * (term, salt, doc_id) anyway). */
   def compact(s: UTF8String): ArrayData = {
     val bytes = s.getBytes
-    val map = new java.util.LinkedHashMap[UTF8String, IntVec]()
+    val map = new java.util.LinkedHashMap[UTF8String, Count]()
     var i = 0
     var len = 0
     while (i < bytes.length) {
@@ -92,56 +79,37 @@ object CompactTokens {
           j += 1
         }
         val key = UTF8String.fromBytes(tok)
-        var lst = map.get(key)
-        if (lst == null) { lst = new IntVec; map.put(key, lst) }
-        lst.add(len)
+        var c = map.get(key)
+        if (c == null) { c = new Count; map.put(key, c) }
+        c.n += 1
         len += 1
       } else i += 1
     }
     val out = new Array[AnyRef](map.size)
-    val posBuf = new PostingCodec.ByteBuf(64)
     val it = map.entrySet().iterator()
     var k = 0
     while (it.hasNext) {
       val e = it.next()
-      out(k) = new GenericInternalRow(Array[Any](
-        e.getKey, e.getValue.n, len, encodePositions(e.getValue, posBuf))): InternalRow
+      out(k) = new GenericInternalRow(Array[Any](e.getKey, e.getValue.n, len)): InternalRow
       k += 1
     }
     new GenericArrayData(out)
   }
 
-  private def encodePositions(ps: IntVec, buf: PostingCodec.ByteBuf): Array[Byte] = {
-    buf.reset()
-    buf.writeVLong(ps.n.toLong)
-    var prev = -1L
-    var j = 0
-    while (j < ps.n) {
-      buf.writeVLong(ps.a(j) - prev)
-      prev = ps.a(j)
-      j += 1
-    }
-    buf.toArray
-  }
-
   /** JVM-String mirror for analyzers that tokenize outside Catalyst (the
-    * code analyzer UDF): same compaction + wire format over a pre-tokenized
-    * stream. */
+    * code analyzer UDF): same compaction over a pre-tokenized stream. */
   def fromTokens(toks: Seq[String]): Seq[TermEntry] = {
-    val map = new java.util.LinkedHashMap[String, IntVec]()
-    var p = 0
+    val map = new java.util.LinkedHashMap[String, Count]()
     toks.foreach { t =>
-      var lst = map.get(t)
-      if (lst == null) { lst = new IntVec; map.put(t, lst) }
-      lst.add(p)
-      p += 1
+      var c = map.get(t)
+      if (c == null) { c = new Count; map.put(t, c) }
+      c.n += 1
     }
-    val buf = new PostingCodec.ByteBuf(64)
     val out = new scala.collection.mutable.ArrayBuffer[TermEntry](map.size)
     val it = map.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      out += TermEntry(e.getKey, e.getValue.n, p, encodePositions(e.getValue, buf))
+      out += TermEntry(e.getKey, e.getValue.n, toks.length)
     }
     out.toSeq
   }

@@ -9,26 +9,21 @@ import PostingCodec.BlockMeta
   * single decode task) stays bounded even for ubiquitous code tokens at
   * 10^12-file scale — the document-partitioned layout ubiquitous in sharded
   * IR systems. `max_weight` is the chunk-level bound (max over its blocks).
-  * `positions` is the parallel in-document token-position stream (phrase
-  * adjacency pre-filter); it lives in its own parquet column so the BM25
-  * scoring path never reads a byte of it (column pruning).
   */
 final case class IndexChunk(chunk_id: Int, first_doc_id: Long,
                             last_doc_id: Long, n: Int, max_weight: Double,
-                            blocks: Array[BlockMeta], postings: Array[Byte],
-                            positions: Array[Byte])
+                            blocks: Array[BlockMeta], postings: Array[Byte])
 
 /** One final index row: a term's chunk plus the term-level df. Field order
   * is the index's column order. */
 final case class IndexRow(term: String, df: Long, chunk_id: Int,
                           first_doc_id: Long, last_doc_id: Long, n: Int,
                           max_weight: Double, blocks: Array[BlockMeta],
-                          postings: Array[Byte], positions: Array[Byte])
+                          postings: Array[Byte])
 
 /** Stage-1 output row: one sorted encoded run per (term, salt) — postings
-  * stream + positions stream + posting count (manifest metrics). */
-final case class SegmentRow(term: String, salt: Long, seg: Array[Byte],
-                            pos: Array[Byte], n: Long)
+  * stream + posting count (manifest metrics). */
+final case class SegmentRow(term: String, salt: Long, seg: Array[Byte], n: Long)
 
 /** Builder for the compressed inverted index (SURVEY.md §7.1 step 4).
   *
@@ -40,29 +35,27 @@ final case class SegmentRow(term: String, salt: Long, seg: Array[Byte],
   * re-sort).
   *
   * The build has exactly ONE wide shuffle, of posting-scale (not
-  * token-scale) rows: tf, doc length, and the wire-encoded position record
-  * all ride in the posting row, so there is no docstats join, no
-  * (doc, term) groupBy exchange, and no map-side sort.
+  * token-scale) rows: tf and doc length ride in the posting row, so there
+  * is no docstats join, no (doc, term) groupBy exchange, and no map-side
+  * sort.
   *
   * Final layout: `index(term, df, chunk_id, first_doc_id, last_doc_id, n,
-  * max_weight, blocks, postings, positions)`; [[write]] range-partitions by
+  * max_weight, blocks, postings)`; [[write]] range-partitions by
   * term so parquet min/max stats prune segment files by query term at read
   * time.
   */
 object InvertedIndex {
   val ChunkSize = 1 << 17
 
-  /** Byte bound per chunk payload (postings + positions), cut at block
-    * granularity (see PostingCodec.mergeStreamsPos): positions bytes per
-    * posting scale with tf, so a pure posting-count bound gives chunks with
-    * ~10× byte variance across terms and the index write's range
-    * partitioning (which samples ROWS) can't byte-balance output files —
-    * the lc forensics recorded write-stage task skew ~10 from exactly that.
-    * 4 MB ⇒ a 128 MB output file holds ~32 uniform rows. */
+  /** Byte bound per chunk payload, cut at block granularity (see
+    * PostingCodec.mergeStreams). At the defaults the posting count already
+    * keeps a chunk below it: a posting is at most 19 varint bytes, so
+    * ChunkSize postings take at most ~2.5 MB. It is also the parquet
+    * row-group size of the index write. */
   val ChunkTargetBytes: Int = 4 << 20
 
-  /** index rows from the compact posting stream (doc_id, term, tf, len,
-    * pos) — graft.index.Stats.postings. `saltBuckets` bounds stage-1 group
+  /** index rows from the compact posting stream (doc_id, term, tf, len)
+    * — graft.index.Stats.postings. `saltBuckets` bounds stage-1 group
     * size: each (term, salt) group holds at most ~nDocs/saltBuckets docs'
     * postings. */
   def build(postings: DataFrame, nDocs: Long, avgdl: Double,
@@ -70,10 +63,10 @@ object InvertedIndex {
     mergeSegments(segments(postings, nDocs, saltBuckets), avgdl)
   }
 
-  /** Stage 1: salted posting runs (term, salt, seg, pos, n).
+  /** Stage 1: salted posting runs (term, salt, seg, n).
     *
-    * The compact posting stream — one row per (doc, term), tf/len/positions
-    * already folded doc-at-a-time by the fused tokenize expression
+    * The compact posting stream — one row per (doc, term), tf/len already
+    * folded doc-at-a-time by the fused tokenize expression
     * (graft.functions.CompactTokens), so the map side materializes no
     * per-token rows and sorts nothing — flows through ONE Tungsten shuffle
     * keyed by (term, salt) — the "salted, skew-aware shuffle keyed by term"
@@ -82,16 +75,15 @@ object InvertedIndex {
     * (spillable, off-heap UnsafeRow) rather than an object hash aggregate:
     * no per-row JVM objects, so the stage scales with cores instead of GC.
     * Salt = doc_id range bucket, so runs are docId-disjoint and stage 2
-    * merges by concatenation. Position records are byte-appended, never
-    * re-encoded.
+    * merges by concatenation.
     *
     * Replaces the reference's in-heap ConcurrentHashMap index build
     * (`Indexer/TextIndexer.java:16, 50-94`) and per-(term,doc) Mongo upserts
     * (`dbManager/dbManager.java:178-237`).
     *
-    * `postings` must be (doc_id, term, tf, len, pos) rows
-    * (graft.index.Stats.postings) — tf/len/positions riding in the row is
-    * what keeps this a single-pass, join-free stage.
+    * `postings` must be (doc_id, term, tf, len) rows
+    * (graft.index.Stats.postings) — tf/len riding in the row is what keeps
+    * this a single-pass, join-free stage.
     */
   def segments(postings: DataFrame, nDocs: Long,
                saltBuckets: Int = 32): DataFrame = {
@@ -101,7 +93,7 @@ object InvertedIndex {
     postings
       .select(col("term"), (col("doc_id") / bucketWidth).cast("long").as("salt"),
         col("doc_id"), col("tf").cast("int").as("tf"),
-        col("len").cast("int").as("len"), col("pos"))
+        col("len").cast("int").as("len"))
       // explicit partition count: encode cost is per posting, not per byte
       // (varbyte output is tiny), so AQE's size-based coalescing would fold
       // this CPU-bound stage into ~4 oversized tasks and let the slowest
@@ -110,12 +102,11 @@ object InvertedIndex {
       .repartition(spark.sessionState.conf.numShufflePartitions,
         col("term"), col("salt"))
       .sortWithinPartitions("term", "salt", "doc_id")
-      .as[(String, Long, Long, Int, Int, Array[Byte])]
+      .as[(String, Long, Long, Int, Int)]
       .mapPartitions { rows =>
         new Iterator[SegmentRow] {
-          private var pending: Option[(String, Long, Long, Int, Int, Array[Byte])] = None
+          private var pending: Option[(String, Long, Long, Int, Int)] = None
           private val buf = new PostingCodec.ByteBuf(1 << 12)
-          private val posBuf = new PostingCodec.ByteBuf(1 << 12)
           def hasNext: Boolean = pending.isDefined || rows.hasNext
           def next(): SegmentRow = {
             var cur = pending.getOrElse(rows.next())
@@ -123,7 +114,6 @@ object InvertedIndex {
             val curTerm = cur._1
             val curSalt = cur._2
             buf.reset()
-            posBuf.reset()
             var prevDoc = -1L
             var nPostings = 0L
             var done = false
@@ -131,7 +121,6 @@ object InvertedIndex {
               buf.writeVLong(cur._3 - prevDoc)
               buf.writeVLong(cur._4.toLong)
               buf.writeVLong(cur._5.toLong)
-              posBuf.appendAll(cur._6)
               prevDoc = cur._3
               nPostings += 1
               if (rows.hasNext) {
@@ -140,19 +129,19 @@ object InvertedIndex {
                 else { pending = Some(n); done = true }
               } else done = true
             }
-            SegmentRow(curTerm, curSalt, buf.toArray, posBuf.toArray, nPostings)
+            SegmentRow(curTerm, curSalt, buf.toArray, nPostings)
           }
         }
       }
-      .toDF("term", "salt", "seg", "pos", "n")
+      .toDF("term", "salt", "seg", "n")
   }
 
-  /** Stage 2: merge (term, seg, pos, n) runs into the final chunked index.
+  /** Stage 2: merge (term, seg, n) runs into the final chunked index.
     *
     * Same architectural shape as stage 1: one term-keyed exchange, an
     * in-partition sort, and a STREAMING encoder in `mapPartitions` that
     * holds exactly one term's run bytes at a time and emits chunk rows as
-    * they fill (PostingCodec.mergeStreamsPos — byte-level, no per-posting
+    * they fill (PostingCodec.mergeStreams — byte-level, no per-posting
     * objects). The previous kryo-UDAF groupBy held EVERY term's run buffers
     * in the ObjectHashAggregate map simultaneously and emitted one row per
     * term carrying all its chunks — for a term present in every doc that is
@@ -166,18 +155,18 @@ object InvertedIndex {
     * serialize the build tail (measured 2-task × 2 s stages at 4 cores). A
     * user-specified partition count is exempt from coalescing.
     *
-    * `segments` needs (term, seg, pos, n); df = Σ n over the term's runs is
+    * `segments` needs (term, seg, n); df = Σ n over the term's runs is
     * known before chunks stream out, so every chunk row carries it. */
   def mergeSegments(segments: DataFrame, avgdl: Double): DataFrame = {
     val spark = segments.sparkSession
     import spark.implicits._
-    segments.select(col("term"), col("seg"), col("pos"), col("n"))
+    segments.select(col("term"), col("seg"), col("n"))
       .repartition(spark.sessionState.conf.numShufflePartitions, col("term"))
       .sortWithinPartitions("term")
-      .as[(String, Array[Byte], Array[Byte], Long)]
+      .as[(String, Array[Byte], Long)]
       .mapPartitions { rows =>
         new Iterator[IndexRow] {
-          private var pending: Option[(String, Array[Byte], Array[Byte], Long)] = None
+          private var pending: Option[(String, Array[Byte], Long)] = None
           // group advancement lives in hasNext (via advance), not next: a
           // term group whose runs all decode to zero postings yields zero
           // chunks, and assuming every group emits one would make next()
@@ -189,12 +178,12 @@ object InvertedIndex {
               var cur = pending.getOrElse(rows.next())
               pending = None
               val term = cur._1
-              val runs = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte])]
+              val runs = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
               var df = 0L
               var done = false
               while (!done) {
-                runs += ((cur._2, cur._3))
-                df += cur._4
+                runs += cur._2
+                df += cur._3
                 if (rows.hasNext) {
                   val n = rows.next()
                   if (n._1 == term) cur = n
@@ -214,15 +203,15 @@ object InvertedIndex {
     * object-path fallback for non-disjoint runs (the salted doc_id-range
     * build never emits those; reachable only via hand-built segments). */
   private[index] def termChunkRows(term: String, df: Long,
-      runs: Seq[(Array[Byte], Array[Byte])], avgdl: Double,
+      runs: Seq[Array[Byte]], avgdl: Double,
       chunkSize: Int = ChunkSize,
       chunkBytes: Int = ChunkTargetBytes): Iterator[IndexRow] = {
     def rows(df: Long, outs: Array[PostingCodec.ChunkOut]) =
       outs.iterator.zipWithIndex.map { case (c, i) =>
         IndexRow(term, df, i, c.first_doc_id, c.last_doc_id, c.n,
-          c.blocks.map(_.max_weight).max, c.blocks, c.bytes, c.pos)
+          c.blocks.map(_.max_weight).max, c.blocks, c.bytes)
       }
-    try rows(df, PostingCodec.mergeStreamsPos(runs, avgdl, Stats.K1, Stats.B,
+    try rows(df, PostingCodec.mergeStreams(runs, avgdl, Stats.K1, Stats.B,
       chunkSize, chunkBytes))
     catch {
       case _: IllegalArgumentException =>
@@ -230,12 +219,10 @@ object InvertedIndex {
         // merge, then re-encode as ONE run and reuse the SAME streaming
         // chunk emitter — both paths share the count+byte cut logic, so
         // they stay byte-identical by construction
-        val merged = PostingCodec.mergeRunsPos(
-          runs.map { case (s, p) => PostingCodec.decodeWithPos(s, p) })
-        val (bytes, _, posBytes) =
-          PostingCodec.encodeWithPos(merged, avgdl, Stats.K1, Stats.B)
-        rows(merged.length.toLong, PostingCodec.mergeStreamsPos(
-          Seq((bytes, posBytes)), avgdl, Stats.K1, Stats.B, chunkSize, chunkBytes))
+        val merged = PostingCodec.mergeRuns(runs.map(PostingCodec.decode))
+        val (bytes, _) = PostingCodec.encode(merged, avgdl, Stats.K1, Stats.B)
+        rows(merged.length.toLong, PostingCodec.mergeStreams(
+          Seq(bytes), avgdl, Stats.K1, Stats.B, chunkSize, chunkBytes))
     }
   }
 
@@ -296,8 +283,7 @@ object InvertedIndex {
         if (nPartitions > 0) nPartitions
         else {
           val bytes = cached.agg(coalesce(sum(
-            length(col("postings")).cast("long") +
-              length(col("positions")).cast("long")), lit(0L)))
+            length(col("postings")).cast("long")), lit(0L)))
             .head().getLong(0)
           writeParts(index.sparkSession, bytes)
         }

@@ -22,14 +22,6 @@ object PostingCodec {
 
   final case class Posting(doc_id: Long, tf: Int, len: Int)
 
-  /** Posting with its in-document token positions (0-based, sorted). The
-    * positions travel in a SEPARATE self-contained byte stream (per posting:
-    * vint(count), then delta-gap varints with prev = -1), stored as its own
-    * parquet column — the BM25 scoring path never reads it (column pruned),
-    * only the phrase adjacency pre-filter does. */
-  final case class PosPosting(doc_id: Long, tf: Int, len: Int,
-                              positions: Array[Int])
-
   final case class BlockMeta(last_doc_id: Long, max_tf: Int,
                              max_weight: Double, offset: Int)
 
@@ -55,14 +47,6 @@ object PostingCodec {
         v >>>= 7
       }
       append(v.toByte)
-    }
-    def appendAll(bs: Array[Byte]): Unit = appendSlice(bs, 0, bs.length)
-    def appendSlice(bs: Array[Byte], from: Int, len: Int): Unit = {
-      var need = buf.length
-      while (n + len > need) need *= 2
-      if (need != buf.length) buf = java.util.Arrays.copyOf(buf, need)
-      System.arraycopy(bs, from, buf, n, len)
-      n += len
     }
     def toArray: Array[Byte] = java.util.Arrays.copyOf(buf, n)
     def reset(): Unit = n = 0
@@ -158,91 +142,41 @@ object PostingCodec {
     if (i == count) out else out.take(i)
   }
 
-  /** Encode sorted, distinct positional postings into
-    * (postingBytes, blockMeta, positionBytes). The postings stream is
-    * byte-identical to [[encode]]'s (decoders of either stream compose);
-    * positions are a parallel stream in the same posting order. */
-  def encodeWithPos(postings: Array[PosPosting], avgdl: Double,
-                    k1: Double, b: Double): (Array[Byte], Array[BlockMeta], Array[Byte]) = {
-    val (bytes, blocks) =
-      encode(postings.map(p => Posting(p.doc_id, p.tf, p.len)), avgdl, k1, b)
-    val pos = new ByteBuf(postings.length * 3)
-    var i = 0
-    while (i < postings.length) {
-      val ps = postings(i).positions
-      pos.writeVLong(ps.length.toLong)
-      var prev = -1L
-      var j = 0
-      while (j < ps.length) {
-        pos.writeVLong(ps(j) - prev)
-        prev = ps(j)
-        j += 1
-      }
-      i += 1
-    }
-    (bytes, blocks, pos.toArray)
-  }
-
-  /** Decode a postings chunk together with its positions stream. */
-  def decodeWithPos(bytes: Array[Byte], posBytes: Array[Byte]): Array[PosPosting] = {
-    val base = decode(bytes)
-    val r = new Reader(posBytes, 0)
-    base.map { p =>
-      val n = r.readVInt()
-      val ps = new Array[Int](n)
-      var prev = -1L
-      var j = 0
-      while (j < n) {
-        prev += r.readVLong()
-        ps(j) = prev.toInt
-        j += 1
-      }
-      PosPosting(p.doc_id, p.tf, p.len, ps)
-    }
-  }
-
-  /** One finished chunk from the streaming merge ([[mergeStreamsPos]]):
+  /** One finished chunk from the streaming merge ([[mergeStreams]]):
     * everything [[graft.index.IndexChunk]] needs except the chunk_id. */
   final case class ChunkOut(first_doc_id: Long, last_doc_id: Long, n: Int,
-                            blocks: Array[BlockMeta], bytes: Array[Byte],
-                            pos: Array[Byte])
+                            blocks: Array[BlockMeta], bytes: Array[Byte])
 
   /** STREAMING merge of doc-disjoint encoded runs into block-max chunks
     * with O(chunk) memory — the scale-critical path of the stage-2 merge.
     *
     * The object path (decode → concat → re-encode) materializes one JVM
-    * object + positions array per posting for the WHOLE term before
-    * chunking; for a term present in every document that is df live
-    * objects per task, and at ~2M docs × 32 merge tasks the old-gen fills
-    * with short-lived posting objects and the build collapses into GC
-    * (measured: 69k files/s at 480k files → 7k at 1.92M). Here each run is
-    * semi-decoded with a varint cursor (primitives only), the position
-    * records — self-contained per posting — are byte-copied, and chunks
-    * are emitted as soon as they fill, so live memory is one chunk's
-    * buffers regardless of df.
+    * object per posting for the WHOLE term before chunking; for a term
+    * present in every document that is df live objects per task, and at
+    * ~2M docs × 32 merge tasks the old-gen fills with short-lived posting
+    * objects and the build collapses into GC (measured: 69k files/s at
+    * 480k files → 7k at 1.92M). Here each run is semi-decoded with a varint
+    * cursor (primitives only) and chunks are emitted as soon as they fill,
+    * so live memory is one chunk's buffers regardless of df.
+    *
+    * A chunk closes at `chunkSize` postings, or at the first BLOCK boundary
+    * where its payload reaches `chunkBytes`: every non-final chunk's posting
+    * count stays a multiple of [[BlockSize]], so Σ blocks per term remains
+    * ceil(df/BlockSize) regardless of where the byte bound cuts.
     *
     * Requires runs pairwise doc-disjoint after ordering by first doc_id
     * (the salted doc_id-range build guarantees this); throws
     * IllegalArgumentException on violation — callers fall back to the
-    * object path ([[mergeRunsPos]] + [[encodeWithPos]]).
+    * object path ([[mergeRuns]] + [[encode]]).
     */
-  /** `chunkBytes`: byte bound on a chunk's payload (postings + positions),
-    * checked at BLOCK boundaries only — every non-final chunk's posting
-    * count stays a multiple of [[BlockSize]], so Σ blocks per term remains
-    * ceil(df/BlockSize) regardless of where the byte bound cuts. Positions
-    * bytes per posting vary ~10× across terms (∝ tf), so count-bounded
-    * chunks have high byte variance and the index write's row-sampled range
-    * partitioning can't byte-balance its output tasks; byte-bounded chunks
-    * make rows ≈ uniform weight at any scale. */
-  def mergeStreamsPos(runs0: Seq[(Array[Byte], Array[Byte])], avgdl: Double,
-                      k1: Double, b: Double, chunkSize: Int,
-                      chunkBytes: Int = Int.MaxValue): Array[ChunkOut] = {
-    val runs = runs0.filter(_._1.nonEmpty).sortBy { case (seg, _) =>
+  def mergeStreams(runs0: Seq[Array[Byte]], avgdl: Double,
+                   k1: Double, b: Double, chunkSize: Int,
+                   chunkBytes: Int = Int.MaxValue): Array[ChunkOut] = {
+    val runs = runs0.filter(_.nonEmpty).sortBy { seg =>
       new Reader(seg, 0).readVLong() - 1 // first doc = gap + (-1)
     }
     val chunks = ArrayBuffer.empty[ChunkOut]
     var out = new ByteBuf(1 << 16)
-    var posOut = new ByteBuf(1 << 16)
     var blocks = new ArrayBuffer[BlockMeta]
     var chunkN = 0
     var chunkFirst = -1L
@@ -260,23 +194,20 @@ object PostingCodec {
     def flushChunk(): Unit = if (chunkN > 0) {
       flushBlock()
       chunks += ChunkOut(chunkFirst, chunkPrev, chunkN, blocks.toArray,
-        out.toArray, posOut.toArray)
-      out = new ByteBuf(1 << 16); posOut = new ByteBuf(1 << 16)
+        out.toArray)
+      out = new ByteBuf(1 << 16)
       blocks = new ArrayBuffer[BlockMeta]
       chunkN = 0; chunkFirst = -1L; chunkPrev = -1L; blockOffset = 0
     }
-    def add(doc: Long, tf: Int, len: Int,
-            posSrc: Array[Byte], posFrom: Int, posLen: Int): Unit = {
+    def add(doc: Long, tf: Int, len: Int): Unit = {
       if (chunkN == chunkSize) flushChunk()
-      else if (blockN == BlockSize &&
-          out.length.toLong + posOut.length >= chunkBytes) flushChunk()
+      else if (blockN == BlockSize && out.length >= chunkBytes) flushChunk()
       if (blockN == BlockSize) flushBlock()
       if (chunkN == 0) { chunkFirst = doc; chunkPrev = -1L }
       if (blockN == 0) blockOffset = out.length
       out.writeVLong(doc - chunkPrev)
       out.writeVLong(tf.toLong)
       out.writeVLong(len.toLong)
-      posOut.appendSlice(posSrc, posFrom, posLen)
       chunkPrev = doc
       chunkN += 1
       blockN += 1
@@ -285,9 +216,8 @@ object PostingCodec {
       if (w > blockMaxW) blockMaxW = w
     }
 
-    runs.foreach { case (seg, posB) =>
+    runs.foreach { seg =>
       val rp = new Reader(seg, 0)
-      val rr = new Reader(posB, 0)
       var prev = -1L
       while (rp.hasMore) {
         val doc = prev + rp.readVLong()
@@ -297,31 +227,11 @@ object PostingCodec {
         require(doc > lastDoc,
           s"streaming merge needs doc-disjoint ordered runs: $doc after $lastDoc")
         lastDoc = doc
-        val posStart = rr.pos
-        val nPos = rr.readVInt()
-        var j = 0
-        while (j < nPos) { rr.readVLong(); j += 1 }
-        add(doc, tf, len, posB, posStart, rr.pos - posStart)
+        add(doc, tf, len)
       }
     }
     flushChunk()
     chunks.toArray
-  }
-
-  /** Merge sorted positional runs (mirrors [[mergeRuns]]). */
-  def mergeRunsPos(runs: Seq[Array[PosPosting]]): Array[PosPosting] = {
-    val nonEmpty = runs.filter(_.nonEmpty).sortBy(_.head.doc_id)
-    if (nonEmpty.isEmpty) return Array.empty
-    val disjoint = nonEmpty.sliding(2).forall {
-      case Seq(a, b) => a.last.doc_id < b.head.doc_id
-      case _         => true
-    }
-    if (disjoint) Array.concat(nonEmpty: _*)
-    else {
-      val all = Array.concat(nonEmpty: _*)
-      java.util.Arrays.sort(all, Ordering.by[PosPosting, Long](_.doc_id))
-      all
-    }
   }
 
   /** Merge sorted runs into one sorted array. Fast path: runs whose docId

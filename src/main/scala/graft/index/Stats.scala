@@ -40,54 +40,19 @@ object Stats {
       case other => throw new IllegalArgumentException(s"analyzer: $other")
     }
 
-  /** Positional token stream (doc_id, term, pos, len) — pos is the 0-based
-    * token index in the document's analyzer output, len the document's token
-    * count. This is the index-build input: ONE tokenize pass produces
-    * everything the build needs (len rides in the row — `size(toks)` from
-    * the same materialized array — so there is no docstats join and no
-    * second tokenize), the builder folds tf out of the sorted stream itself
-    * (no (doc,term) groupBy), and positions feed the phrase adjacency
-    * pre-filter. The intermediate select materializes `toks` once per row so
-    * the generator and `size` share it. */
-  def tokensPos(files: DataFrame, analyzer: String = "simple"): DataFrame = {
-    val toksCol: DataFrame => DataFrame = analyzer match {
-      case "simple" =>
-        graft.functions.GraftFunctions.register(files.sparkSession)
-        f => f.select(col("doc_id"),
-          graft.functions.GraftFunctions.asciiTokens(col("content")).as("toks"))
-      case "code" =>
-        val tokUdf = udf((c: String, l: String) => Analyzer.codeTokens(c, l))
-        f => {
-          val withLang =
-            if (f.columns.contains("lang")) f
-            else f.withColumn("lang", lit(""))
-          withLang.select(col("doc_id"),
-            tokUdf(col("content"), col("lang")).as("toks"))
-        }
-      case other => throw new IllegalArgumentException(s"analyzer: $other")
-    }
-    // posexplode_outer + post-filter instead of posexplode: the non-outer
-    // generator implies an array-non-empty predicate that the optimizer
-    // pushes below the projection, re-evaluating the tokenizer at the scan
-    // (a full second tokenize per row). The outer variant emits one null row
-    // for token-less docs, filtered on the generator OUTPUT — tokenize runs
-    // exactly once per row (asserted by PlanAuditSpec).
-    toksCol(files)
-      .select(col("doc_id"), size(col("toks")).as("len"),
-        posexplode_outer(col("toks")))
-      .filter(col("col").isNotNull)
-      .select(col("doc_id"), col("col").as("term"), col("pos"), col("len"))
-  }
-
-  /** Compacted posting stream `(doc_id, idx, term, tf, len, pos)` — the
+  /** Compacted posting stream `(doc_id, idx, term, tf, len)` — the
     * index-build input: ONE fused tokenize+compact expression eval per
     * document (graft.functions.CompactTokens) emits one entry per DISTINCT
-    * term with tf, doc length, and the wire-encoded position record. No
-    * per-token rows, no pre-shuffle sort, no docstats join. `idx` is the
-    * entry's index within its document (idx == 0 exactly once per tokenized
-    * doc → the docs_tok observation). Same posexplode_outer + isNotNull
-    * shape as [[tokensPos]] so the optimizer cannot push an implied
-    * non-empty filter below the projection and re-run the tokenizer. */
+    * term with tf and doc length. No per-token rows, no pre-shuffle sort,
+    * no docstats join. `idx` is the entry's index within its document
+    * (idx == 0 exactly once per tokenized doc → the docs_tok observation).
+    *
+    * posexplode_outer + post-filter instead of posexplode: the non-outer
+    * generator implies an array-non-empty predicate that the optimizer
+    * pushes below the projection, re-evaluating the tokenizer at the scan
+    * (a full second tokenize per row). The outer variant emits one null row
+    * for token-less docs, filtered on the generator OUTPUT — tokenize runs
+    * exactly once per row (asserted by PlanAuditSpec). */
   def postings(files: DataFrame, analyzer: String = "simple"): DataFrame = {
     val entries: DataFrame = analyzer match {
       case "simple" =>
@@ -108,8 +73,7 @@ object Stats {
       .select(col("doc_id"), posexplode_outer(col("entries")))
       .filter(col("col").isNotNull)
       .select(col("doc_id"), col("pos").as("idx"), col("col.term").as("term"),
-        col("col.tf").as("tf"), col("col.len").as("len"),
-        col("col.pos").as("pos"))
+        col("col.tf").as("tf"), col("col.len").as("len"))
   }
 
   /** tf(doc_id, term, tf) — A1. */

@@ -221,6 +221,7 @@ object Dedup {
       iter += 1
     }
     e.unpersist()
+    if (!done && prev != null) prev.unpersist() // throwing below: cache nothing
     // Silent truncation at maxIter would return WRONG cluster_ids (and
     // representatives() would then keep several docs of one true cluster).
     // Near-clique LSH graphs converge in a handful of rounds; a component

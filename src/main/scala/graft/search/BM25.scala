@@ -4,8 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.index.Stats
 
-/** BM25 column expressions shared by the uncompressed and compressed
-  * scorers (pure built-in arithmetic → whole-stage codegen). */
+/** BM25 column expressions for the engine's scorers (pure built-in
+  * arithmetic → whole-stage codegen). */
 object BM25 {
   val K1: Double = Stats.K1
   val B: Double = Stats.B

@@ -26,12 +26,12 @@ class EntrySpec extends SparkSpec {
   test("search results rank-identical to in-memory oracle on sf0.001") {
     val docs = Corpus.files(spark, dir).select("doc_id", "content").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val t = graft.index.IndexTables.build(Corpus.files(spark, dir))
-    val eng = new graft.search.SearchEngine(t)
+    val files = Corpus.files(spark, dir)
+    val eng = graft.search.CompressedSearchEngine.inMemory(files)
     for (q <- Seq("merge sort window", "dup stream", "\"hash join\"",
         "\"merge sort\" AND \"table scan\"", "\"batch batch\" OR \"window agg\"",
         "\"sort merge\" NOT \"hash join\"")) {
-      val got = eng.search(q, 10).collect()
+      val got = eng.search(q, files, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val want = LocalOracle.search(docs, "simple", q, 10)
       assert(got === want, s"query [$q]")

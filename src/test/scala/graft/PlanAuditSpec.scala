@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
 import graft.index.{IndexTables, InvertedIndex}
-import graft.search.{CompressedSearchEngine, SearchEngine}
+import graft.search.CompressedSearchEngine
 
 /** Asserts the physical-plan properties the engine's 100 TB posture depends
   * on (the same plans PLANS.md documents): pushdown reaches the parquet
@@ -18,8 +18,9 @@ class PlanAuditSpec extends SparkSpec {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  private lazy val t = IndexTables.build(Corpus.files(spark, sf))
-  private lazy val eng = new SearchEngine(t)
+  private lazy val files = Corpus.files(spark, sf)
+  private lazy val t = IndexTables.build(files)
+  private lazy val eng = CompressedSearchEngine.inMemory(files)
 
   test("predicate and projection reach the parquet scan") {
     val p = plan(Corpus.documents(spark, sf)
@@ -29,10 +30,12 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("token query: broadcast join + TakeOrderedAndProject top-k") {
-    val p = plan(eng.search("merge sort window"))
+    // as served: scoring needs no join at all (len rides in the posting),
+    // and hydration broadcasts the k-row top-k into the display scan
+    val p = plan(Serve.hydrate(eng.search("merge sort window", files), files))
     assert(p.contains("TakeOrderedAndProject"), p)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("GlobalSort"), p)
+    assert("BroadcastHashJoin".r.findAllIn(p).length == 1, p)
+    assert(!p.contains("SortMergeJoin"), p)
   }
 
   test("compressed index scan pushes the query-term IN filter") {
@@ -58,7 +61,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(reparts == 1, s"expected 1 REPARTITION_BY_NUM, got $reparts in:\n$p")
     assert(p.contains("hashpartitioning(term"), p)
     assert(p.contains("Sort [term"), p)
-    // tf/len/positions ride in the posting row: the build plan has NO join
+    // tf/len ride in the posting row: the build plan has NO join
     assert(!p.contains("Join"), p)
     // the fused tokenize+compact expression evaluates exactly once per row
     // (the array is materialized once — not re-evaluated for the generator
@@ -69,6 +72,23 @@ class PlanAuditSpec extends SparkSpec {
     // map side no longer sorts per-token rows
     val sorts = "\\bSort \\[".r.findAllIn(p).length
     assert(sorts == 1, s"expected 1 Sort (post-shuffle only), got $sorts in:\n$p")
+  }
+
+  test("index merge over parquet segments: one term repartition, kept by AQE") {
+    // segments written and read back as CheckpointedBuild.run does
+    val segPath = "/tmp/graft_planspec_segments"
+    graft.sources.ParquetTableIO.overwrite(InvertedIndex.segments(
+      graft.index.Stats.postings(files), t.nDocs), s"$segPath/bucket=0")
+    val df = InvertedIndex.mergeSegments(
+      graft.sources.ParquetTableIO.read(spark, segPath), t.avgdl)
+    df.collect() // AQE finalizes the plan at runtime
+    val p = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    // elision hazard: a repartition dropped for an inherited hashpartitioning(term) lets AQE split a term's runs
+    val reparts = "REPARTITION_BY_NUM".r.findAllIn(p).length
+    assert(reparts == 1, s"expected 1 REPARTITION_BY_NUM, got $reparts in:\n$p")
+    assert("Exchange hashpartitioning\\(term#\\d+, \\d+\\), REPARTITION_BY_NUM"
+      .r.findAllIn(p).length == 1, p)
   }
 
   test("minhash pipeline: one fused signature eval, reused bucket exchange") {
@@ -104,9 +124,13 @@ class PlanAuditSpec extends SparkSpec {
     assert(evals == 1, s"expected 1 simhashval eval, got $evals in:\n$p")
   }
 
-  test("boolean NOT candidates: anti join, no distinct aggregates on the sets") {
-    val p = plan(eng.search("\"sort merge\" NOT \"hash join\""))
-    assert(p.contains("LeftAnti"), p)
+  test("boolean NOT candidates: flag filter, no anti join, no distinct agg") {
+    // NOT is a filter over one membership-flag aggregate of both phrases'
+    // terms: no anti join and no count-distinct over either candidate set
+    val p = plan(eng.search("\"sort merge\" NOT \"hash join\"", files))
+    assert(!p.contains("LeftAnti"), p)
+    assert(p.contains("bit_or"), p)
+    assert(!p.contains("distinct"), p)
   }
 
   test("near-dup pairs plan is an LSH-bucket equi-join, never a cartesian") {
@@ -127,7 +151,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("candidate membership is a semi join, not a materialized set") {
-    val p = plan(eng.search("\"hash join\" AND \"merge sort\""))
+    val p = plan(eng.search("\"hash join\" AND \"merge sort\"", files))
     assert(p.contains("LeftSemi"), p)
   }
 

@@ -26,6 +26,11 @@ class CheckpointedBuildSpec extends SparkSpec {
     val eng = CheckpointedBuild.load(spark, out)
     val hits = eng.searchTopK(Seq("merge", "sort"), 10).collect()
     assert(hits.nonEmpty)
+    // postings-only layout: no positions stream in the index or segments
+    assert(eng.index.columns.toSeq === Seq("term", "df", "chunk_id",
+      "first_doc_id", "last_doc_id", "n", "max_weight", "blocks", "postings"))
+    assert(spark.read.parquet(s"$out/segments").columns.toSet ===
+      Set("term", "salt", "seg", "n", "bucket"))
   }
 
   test("resume after mid-build failure == fresh build") {

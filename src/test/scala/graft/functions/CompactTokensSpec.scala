@@ -7,43 +7,25 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The fused tokenize+compact expression must agree exactly with the
   * per-token reference path (AsciiTokens + manual grouping) on arbitrary
-  * input — terms, tf, doc length, and the decoded position stream. */
+  * input — terms, tf and doc length. */
 class CompactTokensSpec extends AnyFunSuite {
 
-  private def decodePos(bytes: Array[Byte]): Seq[Int] = {
-    var p = 0
-    def readVLong(): Long = {
-      var shift = 0; var v = 0L
-      var b = bytes(p); p += 1
-      while ((b & 0x80) != 0) {
-        v |= (b & 0x7fL) << shift; shift += 7; b = bytes(p); p += 1
-      }
-      v | ((b & 0x7fL) << shift)
-    }
-    val n = readVLong().toInt
-    var prev = -1L
-    (0 until n).map { _ => prev += readVLong(); prev.toInt }
-  }
-
   /** Reference: AsciiTokens tokenize + group in order of first occurrence. */
-  private def reference(s: String): Seq[(String, Int, Int, Seq[Int])] = {
+  private def reference(s: String): Seq[(String, Int, Int)] = {
     val arr = AsciiTokens.tokenize(UTF8String.fromString(s))
     val toks = (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString)
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Int]]
-    toks.zipWithIndex.foreach { case (t, i) =>
-      m(t) = m.getOrElse(t, Vector.empty) :+ i
-    }
-    m.toSeq.map { case (t, ps) => (t, ps.length, toks.length, ps) }
+    val m = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    toks.foreach(t => m(t) = m.getOrElse(t, 0) + 1)
+    m.toSeq.map { case (t, tf) => (t, tf, toks.length) }
   }
 
-  private def fused(s: String): Seq[(String, Int, Int, Seq[Int])] = {
+  private def fused(s: String): Seq[(String, Int, Int)] = {
     val arr = CompactTokens.compact(UTF8String.fromString(s))
     (0 until arr.numElements()).map { i =>
       val r = arr.get(i, CompactTokens.schema match {
         case org.apache.spark.sql.types.ArrayType(et, _) => et
       }).asInstanceOf[InternalRow]
-      (r.getUTF8String(0).toString, r.getInt(1), r.getInt(2),
-        decodePos(r.getBinary(3)))
+      (r.getUTF8String(0).toString, r.getInt(1), r.getInt(2))
     }
   }
 
@@ -52,8 +34,8 @@ class CompactTokensSpec extends AnyFunSuite {
     3 -> Gen.oneOf(' ', '\n', '\t', '.', ',', ';', '(', ')', '{', '}', '_'),
     1 -> Gen.oneOf('é', 'ß', '漢', 'K'))).map(_.mkString)
 
-  test("property: fused compact == AsciiTokens tokenize + group, including " +
-      "positions, on arbitrary mixed-unicode input") {
+  test("property: fused compact == AsciiTokens tokenize + group") {
+    // on arbitrary mixed-unicode input
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(300),
       Prop.forAll(genContent) { s => fused(s) == reference(s) })
@@ -70,7 +52,7 @@ class CompactTokensSpec extends AnyFunSuite {
     val viaExpr = fused(s)
     val viaTokens = CompactTokens
       .fromTokens(s.toLowerCase.split("\\s+").toSeq)
-      .map(e => (e.term, e.tf, e.len, decodePos(e.pos)))
+      .map(e => (e.term, e.tf, e.len))
     assert(viaExpr == viaTokens)
   }
 }

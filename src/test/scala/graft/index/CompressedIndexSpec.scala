@@ -1,11 +1,11 @@
 package graft.index
 
 import graft.SparkSpec
-import graft.search.{CompressedSearchEngine, SearchEngine}
-import org.apache.spark.sql.functions._
+import graft.oracle.LocalOracle
+import graft.search.CompressedSearchEngine
 
-/** Compressed index == uncompressed stats tables == pruned path, on seeded
-  * random corpora (FIXTURES.md §5 properties). */
+/** Compressed index == stats tables == in-memory oracle == pruned path, on
+  * seeded random corpora (FIXTURES.md §5 properties). */
 class CompressedIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -68,12 +68,11 @@ class CompressedIndexSpec extends SparkSpec {
     assert(dup === dedup)
   }
 
-  test("compressed exhaustive == uncompressed engine scores") {
-    val (t, ce) = build(13, 150, 8)
-    val se = new SearchEngine(t, "simple")
+  test("compressed exhaustive == LocalOracle scores") {
+    val (_, ce) = build(13, 150, 8)
     for (terms <- Seq(Seq("merge", "sort"), Seq("dup"), Seq("rareterm", "hash", "join"))) {
       val got = ce.searchTopK(terms, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val want = se.scoreTopK(terms, None, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val want = LocalOracle.search(corpus(13, 150), "simple", terms.mkString(" "))
       assert(got === want, s"terms $terms")
     }
   }
@@ -150,35 +149,18 @@ class CompressedIndexSpec extends SparkSpec {
     }
   }
 
-  test("chunking splits long posting lists and preserves order + positions") {
+  test("chunking splits long posting lists and preserves order") {
     // force tiny chunks by merging manually with a small chunk size
     val avgdl = 10.0
-    val pps = (0L until 300L).map { i =>
-      val tf = 1 + (i % 5).toInt
-      PostingCodec.PosPosting(i * 3, tf, 30, Array.tabulate(tf)(j => j * 2 + (i % 7).toInt))
-    }
-    val segBuf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    val posBuf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    var prev = -1L
-    pps.foreach { p =>
-      PostingCodec.writeVLong(segBuf, p.doc_id - prev)
-      PostingCodec.writeVLong(segBuf, p.tf.toLong)
-      PostingCodec.writeVLong(segBuf, p.len.toLong)
-      prev = p.doc_id
-      PostingCodec.writeVLong(posBuf, p.positions.length.toLong)
-      var pp = -1L
-      p.positions.foreach { q => PostingCodec.writeVLong(posBuf, q - pp); pp = q }
-    }
-    val chunks = InvertedIndex.termChunkRows("t", 300L,
-      Seq((segBuf.toArray, posBuf.toArray)), avgdl, chunkSize = 64).toArray
+    val ps = (0L until 300L).map(i => PostingCodec.Posting(i * 3, 1 + (i % 5).toInt, 30))
+    val (seg, _) = PostingCodec.encode(ps.toArray, avgdl, 1.2, 0.75)
+    val chunks = InvertedIndex.termChunkRows("t", 300L, Seq(seg), avgdl,
+      chunkSize = 64).toArray
     assert(chunks.forall(_.df === 300))
     assert(chunks.length === 5) // ceil(300/64)
     assert(chunks.map(_.chunk_id).toSeq === (0 until 5))
     val all = chunks.flatMap(c => PostingCodec.decode(c.postings))
-    assert(all.toSeq === pps.map(p => PostingCodec.Posting(p.doc_id, p.tf, p.len)))
-    val allPos = chunks.flatMap(c =>
-      PostingCodec.decodeWithPos(c.postings, c.positions))
-    assert(allPos.map(_.positions.toSeq).toSeq === pps.map(_.positions.toSeq))
+    assert(all.toSeq === ps)
     assert(chunks.forall(c => c.first_doc_id <= c.last_doc_id))
   }
 }

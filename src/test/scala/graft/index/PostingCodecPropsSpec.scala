@@ -63,72 +63,47 @@ class PostingCodecPropsSpec extends AnyFunSuite {
     })
   }
 
-  /** Positional postings: tf positions in [0, 2^28), strictly ascending. */
-  private val genPosPostings: Gen[Array[PosPosting]] =
-    genPostings.map(_.map { p =>
-      val tf = math.min(p.tf, 64) // positions array bounded for test speed
-      val rnd = new scala.util.Random(p.doc_id)
-      var pos = -1L
-      val positions = Array.fill(tf) { pos += 1 + rnd.nextInt(1000); pos.toInt }
-      PosPosting(p.doc_id, tf, p.len, positions)
-    })
-
-  test("property: positional encode then decode is the identity, and the " +
-      "postings stream is byte-identical to the non-positional encoder's") {
-    check("pos roundtrip")(Prop.forAll(genPosPostings) { ps =>
-      val (bytes, _, posBytes) = encodeWithPos(ps, 100.0, 1.2, 0.75)
-      val (plain, _) = encode(ps.map(p => Posting(p.doc_id, p.tf, p.len)), 100.0, 1.2, 0.75)
-      val back = decodeWithPos(bytes, posBytes)
-      java.util.Arrays.equals(bytes, plain) &&
-        back.map(p => (p.doc_id, p.tf, p.len)).toSeq ==
-          ps.map(p => (p.doc_id, p.tf, p.len)).toSeq &&
-        back.map(_.positions.toSeq).toSeq == ps.map(_.positions.toSeq).toSeq
-    })
-  }
-
-  test("property: streaming mergeStreamsPos == object-path chunking, " +
-      "byte-identical postings/positions and identical block metadata") {
+  test("property: streaming mergeStreams == object-path chunking") {
+    // byte-identical postings and identical block metadata per chunk
     val genChunkSize = Gen.oneOf(7, 64, 1 << 17)
-    check("mergeStreams")(Prop.forAll(genPosPostings, Gen.chooseNum(1, 8),
+    check("mergeStreams")(Prop.forAll(genPostings, Gen.chooseNum(1, 8),
         genChunkSize) { (ps, k, chunkSize) =>
       val slices = ps.grouped(math.max(1, ps.length / k + 1)).toSeq
         .filter(_.nonEmpty)
-      val runs = slices.map(s => {
-        val (bytes, _, posBytes) = encodeWithPos(s, 100.0, 1.2, 0.75)
-        (bytes, posBytes)
-      })
-      val got = mergeStreamsPos(runs, 100.0, 1.2, 0.75, chunkSize)
+      val runs = slices.map(encode(_, 100.0, 1.2, 0.75)._1)
+      val got = mergeStreams(runs, 100.0, 1.2, 0.75, chunkSize)
       val want = ps.grouped(chunkSize).toSeq.map { cps =>
-        val (bytes, blocks, posBytes) = encodeWithPos(cps, 100.0, 1.2, 0.75)
-        (cps.head.doc_id, cps.last.doc_id, cps.length, blocks, bytes, posBytes)
+        val (bytes, blocks) = encode(cps, 100.0, 1.2, 0.75)
+        (cps.head.doc_id, cps.last.doc_id, cps.length, blocks, bytes)
       }
       got.length == want.length && got.zip(want).forall {
-        case (g, (first, last, n, blocks, bytes, posBytes)) =>
+        case (g, (first, last, n, blocks, bytes)) =>
           g.first_doc_id == first && g.last_doc_id == last && g.n == n &&
             java.util.Arrays.equals(g.bytes, bytes) &&
-            java.util.Arrays.equals(g.pos, posBytes) &&
             g.blocks.toSeq == blocks.toSeq
       }
     })
   }
 
-  test("mergeStreamsPos rejects interleaved (non-disjoint) runs") {
-    val a = Array(PosPosting(1L, 1, 10, Array(0)), PosPosting(5L, 1, 10, Array(1)))
-    val b = Array(PosPosting(3L, 1, 10, Array(2)))
-    val runs = Seq(a, b).map { s =>
-      val (bytes, _, posBytes) = encodeWithPos(s, 100.0, 1.2, 0.75)
-      (bytes, posBytes)
-    }
-    assertThrows[IllegalArgumentException] {
-      mergeStreamsPos(runs, 100.0, 1.2, 0.75, 1 << 17)
-    }
+  test("property: mergeStreams byte bound cuts chunks only at block ends") {
+    check("mergeStreams bytes")(Prop.forAll(genPostings, Gen.chooseNum(1, 8),
+        Gen.chooseNum(1, 4000)) { (ps, k, chunkBytes) =>
+      val runs = ps.grouped(math.max(1, ps.length / k + 1)).toSeq
+        .map(encode(_, 100.0, 1.2, 0.75)._1)
+      val got = mergeStreams(runs, 100.0, 1.2, 0.75, 1 << 17, chunkBytes)
+      got.flatMap(c => decode(c.bytes)).toSeq == ps.toSeq &&
+        got.dropRight(1).forall(c => c.n % BlockSize == 0 &&
+          c.bytes.length >= chunkBytes && c.blocks.last.offset < chunkBytes)
+    })
   }
 
-  test("property: mergeRunsPos of doc-disjoint slices == concatenation") {
-    check("mergeRunsPos")(Prop.forAll(genPosPostings, Gen.chooseNum(1, 8)) { (ps, k) =>
-      val slices = ps.grouped(math.max(1, ps.length / k + 1)).toSeq
-      mergeRunsPos(slices).map(_.doc_id).toSeq == ps.map(_.doc_id).toSeq
-    })
+  test("mergeStreams rejects interleaved (non-disjoint) runs") {
+    val a = Array(Posting(1L, 1, 10), Posting(5L, 1, 10))
+    val b = Array(Posting(3L, 1, 10))
+    val runs = Seq(a, b).map(encode(_, 100.0, 1.2, 0.75)._1)
+    assertThrows[IllegalArgumentException] {
+      mergeStreams(runs, 100.0, 1.2, 0.75, 1 << 17)
+    }
   }
 
   test("property: mergeRuns of arbitrary splits == flat sort") {

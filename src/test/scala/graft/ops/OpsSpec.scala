@@ -56,8 +56,11 @@ class OpsSpec extends SparkSpec {
     assert(Dedup.clusters(empty).isEmpty)
     // non-convergence within maxIter must fail loudly, never return a
     // silently-truncated (wrong) labeling
+    val cached = spark.sparkContext.getPersistentRDDs.size
     val ex = intercept[IllegalArgumentException](Dedup.clusters(chain, maxIter = 2))
     assert(ex.getMessage.contains("did not converge"))
+    // the failed call leaves no cached frame behind
+    assert(spark.sparkContext.getPersistentRDDs.size === cached)
   }
 
   test("simhash: identical docs get identical hashes; hash is stable") {

@@ -1,7 +1,6 @@
 package graft.search
 
 import graft.SparkSpec
-import graft.index.IndexTables
 import graft.oracle.LocalOracle
 import org.apache.spark.sql.functions._
 
@@ -16,7 +15,7 @@ class QueryParserSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 }
 
-/** Rank-identity of the Spark engine vs the in-memory oracle on seeded
+/** Rank-identity of the serving engine vs the in-memory oracle on seeded
   * random corpora, across analyzers and all query forms (SURVEY.md §5). */
 class SearchSpec extends SparkSpec {
   import spark.implicits._
@@ -46,24 +45,51 @@ class SearchSpec extends SparkSpec {
     "\"zzz absent phrase\" OR \"merge\""
   )
 
-  private def enginFor(docs: Seq[(Long, String)], analyzer: String): SearchEngine = {
-    val files = docs.toDF("doc_id", "content")
+  private def filesFor(docs: Seq[(Long, String)]) =
+    docs.toDF("doc_id", "content")
       .withColumn("repo", lit("r")).withColumn("path", lit("p"))
       .withColumn("commit", lit("c")).withColumn("lang", lit("scala"))
       .withColumn("sha", sha2(col("content"), 256))
-    new SearchEngine(IndexTables.build(files, analyzer), analyzer)
+
+  private def assertMatchesOracle(docs: Seq[(Long, String)], analyzer: String,
+                                  queries: Seq[String], ctx: String): Unit = {
+    val files = filesFor(docs)
+    val eng = CompressedSearchEngine.inMemory(files, analyzer)
+    for (q <- queries) {
+      val got = eng.search(q, files, 10, analyzer).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val want = LocalOracle.search(docs, analyzer, q, 10, docLang = "scala")
+      assert(got === want, s"query [$q] analyzer=$analyzer $ctx")
+    }
   }
 
   for (analyzer <- Seq("simple", "code"); seed <- Seq(1, 2)) {
     test(s"engine == oracle ($analyzer, seed=$seed)") {
-      val docs = randomCorpus(seed, 40)
-      val eng = enginFor(docs, analyzer)
-      for (q <- queryForms) {
-        val got = eng.search(q, 10).collect()
-          .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val want = LocalOracle.search(docs, analyzer, q, 10, docLang = "scala")
-        assert(got === want, s"query [$q] analyzer=$analyzer seed=$seed")
-      }
+      assertMatchesOracle(randomCorpus(seed, 40), analyzer, queryForms,
+        s"seed=$seed")
     }
+  }
+
+  test("engine == oracle on phrase/boolean queries with sort-merge joins") {
+    // the sf0.01 oracle corpora plan every candidate semi join as a
+    // broadcast; with broadcasts off they plan as sort-merge joins over
+    // shuffles, the shape large corpora get
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val structured = queryForms.filter(_.contains("\""))
+      for (analyzer <- Seq("simple", "code"); seed <- Seq(1, 2))
+        assertMatchesOracle(randomCorpus(seed, 40), analyzer, structured,
+          s"seed=$seed, no broadcast")
+      val files = filesFor(randomCorpus(1, 40))
+      val df = CompressedSearchEngine.inMemory(files)
+        .search("\"merge sort\"", files)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
+      assert(p.contains("SortMergeJoin"), p)
+      assert(!p.contains("BroadcastHashJoin"), p)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
