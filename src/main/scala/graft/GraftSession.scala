@@ -18,8 +18,8 @@ object GraftSession {
       .master(s"local[$parallelism]")
       .appName(app)
       .config("spark.sql.shuffle.partitions", parallelism.toString)
-      // Query-scan split granularity aligned with the index's 4 MB chunk
-      // payload (InvertedIndex.ChunkTargetBytes): a 3-term BM25 query reads
+      // Query-scan split granularity aligned with the index's 4 MB row
+      // groups (InvertedIndex.ChunkTargetBytes): a 3-term BM25 query reads
       // ~tens of MB of term-pruned chunk rows, and at the 128 MB default
       // that whole decode+partial-agg ran as 1-2 tasks (measured 1.6 s,
       // near-serial, at the 480k-file bench corpus; ~0.5 s once split).

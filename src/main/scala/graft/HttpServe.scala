@@ -2,6 +2,8 @@ package graft
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** HTTP front over [[Serve.Session]] — the reference's flagship entry point
   * is a REST controller (`Backend/TextController.java:30-44`: query/page/
@@ -11,14 +13,37 @@ import java.net.InetSocketAddress
   *   GET /search?query=Q[&page=P&limit=N] → JSON array of result rows
   *   GET /suggest?prefix=S                → JSON array of (query, cnt)
   *
-  * Requests are handled on the dispatcher thread (executor null): the
-  * session's engine is one warm Spark driver, so requests serialize onto it
-  * exactly like the REPL front in [[Serve.main]]. */
+  * Requests run in parallel on a bounded pool, like the reference's servlet
+  * container: the dispatcher thread only accepts connections. The pool has
+  * `defaultParallelism` threads — one per core the warm Spark driver can run
+  * tasks on, so a larger pool would only queue jobs inside Spark's FIFO
+  * scheduler. The session is safe to share: each request plans its own
+  * DataFrames, and the query log's batch writer is synchronized. */
 object HttpServe {
+
+  /** Idle seconds after which a pool thread retires. */
+  private val IdleSeconds = 5L
+
+  /** `size` daemon threads named `graft-http-<port>-<n>`, retiring when
+    * idle: a stopped server leaves no thread behind and never holds the JVM
+    * open. Excess requests wait in the unbounded queue. */
+  private def pool(size: Int, port: Int): ThreadPoolExecutor = {
+    val ids = new AtomicInteger()
+    val p = new ThreadPoolExecutor(size, size, IdleSeconds, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, s"graft-http-$port-${ids.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
 
   /** Start the front on `port` (0 = ephemeral); returns the bound server. */
   def start(session: Serve.Session, port: Int): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    server.setExecutor(pool(session.spark.sparkContext.defaultParallelism,
+      server.getAddress.getPort))
     def params(ex: HttpExchange): Map[String, String] =
       Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&").toSeq
         .filter(_.contains("=")).map { kv =>

@@ -46,8 +46,11 @@ object Plans {
       ("Served BM25 token query (top-k + display hydration)",
         "Expect: the index scan with `PushedFilters: [In(term, …)]`, hash " +
           "partial+final aggregation for the per-doc score sum, " +
-          "`TakeOrderedAndProject` for top-k (no global sort), and the k-row " +
-          "top-k broadcast into the display-column scan of the corpus.",
+          "`TakeOrderedAndProject` for top-k (no global sort), the k-row " +
+          "top-k broadcast into the display-column scan of the corpus, and " +
+          "the joined rows sorted inside one `Coalesce 1` partition — no " +
+          "`rangepartitioning` exchange, whose sample job would scan the " +
+          "corpus again.",
         Serve.hydrate(ceng.search("merge sort window", files), files)),
       ("BM25 over the compressed block-max index",
         "Expect: parquet scan of the index with `PushedFilters: [In(term, …)]` " +

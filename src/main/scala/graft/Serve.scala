@@ -13,9 +13,10 @@ import graft.search.QueryLog
   * What "long-lived" buys and what this entry exercises: the published index
   * is loaded ONCE (parquet scans served from the persisted engine DataFrame),
   * the display corpus is persisted once — per-query work is only the
-  * query's own plan. Every query is appended to the query log (S10), so
-  * `:suggest` reflects the session's history like the reference's
-  * suggestion endpoint.
+  * query's own plan. Every query is logged (S10) through an in-memory batch
+  * that is written before any suggestion is computed, so `:suggest` reflects
+  * the session's history like the reference's suggestion endpoint. One
+  * [[Session]] may serve many threads at once ([[HttpServe]]).
   *
   * Protocol (one request per line, one JSON line per result row):
   *   <query>                 top-10 BM25 (tokens / "phrase" / boolean)
@@ -42,34 +43,69 @@ object Serve {
     sb.append('"').toString
   }
 
-  /** J2/J3 hydrate AFTER top-k: display columns only for the result page. */
+  /** J2/J3 hydrate AFTER top-k: display columns only for the result page.
+    * The k joined rows are ordered inside one partition: a global `orderBy`
+    * would start a range-partition sample job that scans the display table
+    * a second time. */
   def hydrate(topk: DataFrame, files: DataFrame): DataFrame =
     topk.join(files.select("doc_id", "repo", "path", "lang"), Seq("doc_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
+      .coalesce(1).sortWithinPartitions(col("score").desc, col("doc_id").asc)
 
-  /** One warm serving session over a published checkpoint dir. */
-  final class Session(spark: SparkSession, ckptDir: String, corpus: DataFrame,
-                      logPath: String) {
+  /** Logged queries buffered before one [[QueryLog.append]] batch. */
+  private val LogBatch = 256
+
+  /** One warm serving session over a published checkpoint dir, safe to
+    * share between threads.
+    *
+    * Queries are logged in memory and written as one batch before any
+    * suggestion is computed, when [[LogBatch]] are pending, and on
+    * [[close]]. Suggestions therefore count every query sent before them.
+    * A process killed without `close()` loses at most `LogBatch - 1` log
+    * rows, and only suggestion data. */
+  final class Session(val spark: SparkSession, ckptDir: String,
+                      corpus: DataFrame, logPath: String) {
     val engine: graft.search.CompressedSearchEngine =
       CheckpointedBuild.load(spark, ckptDir)
     private val files = corpus.persist()
+    // the log table exists from the start, so it reads (empty) before the
+    // first batch is written
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(logPath))
+
+    private val pending = scala.collection.mutable.ArrayBuffer.empty[String]
+    private val writer = new Object
+
+    private def log(raw: String): Unit = {
+      val full = pending.synchronized { pending += raw; pending.length >= LogBatch }
+      if (full) flushLog()
+    }
+
+    /** Write every pending query as one batch. The one writer at a time
+      * keeps concurrent appends out of each other's parquet `_temporary`
+      * directory, and a caller returns only after every query logged
+      * before its call is written. */
+    private def flushLog(): Unit = writer.synchronized {
+      val batch = pending.synchronized {
+        val b = pending.toList
+        pending.clear()
+        b
+      }
+      QueryLog.append(spark, logPath, batch)
+    }
 
     def query(raw: String, k: Int = 10): DataFrame = {
-      QueryLog.append(spark, logPath, Seq(raw))
+      log(raw)
       hydrate(engine.search(raw, files, k), files)
     }
 
     def page(raw: String, page: Int, limit: Int): DataFrame = {
-      QueryLog.append(spark, logPath, Seq(raw))
+      log(raw)
       hydrate(engine.searchPage(raw, files, page, limit), files)
     }
 
-    def suggest(prefix: String): DataFrame =
-      // a :suggest before any logged query means no log table yet — that's
-      // an empty suggestion list, not a missing-path error
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(logPath)))
-        spark.range(0).select(lit("").as("query"), lit(0L).as("cnt"))
-      else QueryLog.suggest(QueryLog.load(spark, logPath), prefix)
+    def suggest(prefix: String): DataFrame = {
+      flushLog()
+      QueryLog.suggest(QueryLog.load(spark, logPath), prefix)
+    }
 
     /** Result rows rendered as JSON strings — the wire format shared by the
       * REPL and HTTP fronts. */
@@ -92,7 +128,10 @@ object Serve {
       render(df)
     }
 
-    def close(): Unit = files.unpersist()
+    def close(): Unit = {
+      flushLog()
+      files.unpersist()
+    }
   }
 
   /** args: <sfDir> [ckptDir]. Builds the checkpoint if not yet published

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -196,33 +197,37 @@ object GraftFunctions {
   val SimHashName = "graft_simhash"
   val FingerprintName = "graft_fingerprint"
 
+  /** Each function's name and expression builder. */
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    AsciiContainsName -> (exprs => AsciiContains(exprs(0), exprs(1))),
+    CosineSimName -> (exprs => CosineSim(exprs(0), exprs(1))),
+    SignBucketName -> (exprs => SignBucket(exprs(0),
+      exprs(1).eval().asInstanceOf[Int])),
+    MinHashSigsName -> (exprs => MinHashSigs(exprs(0),
+      exprs(1).eval().asInstanceOf[Int])),
+    SimHashName -> (exprs => SimHashVal(exprs.head)),
+    FingerprintName -> (exprs => FingerprintMin(exprs.head)),
+    AsciiLowerName -> (exprs => AsciiLower(exprs.head)),
+    AsciiTokensName -> (exprs => AsciiTokens(exprs.head)),
+    CompactTokensName -> (exprs => CompactTokens(exprs.head)),
+    DecodePostingsName -> (exprs => DecodePostings(exprs.head)),
+    DecodeBlocksName -> (exprs =>
+      DecodePostingsBlocks(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4))))
+
+  val Names: Seq[String] = builders.map(_._1)
+
+  /** Register the functions the session does not hold yet. A registered
+    * function is never replaced, so repeated calls (one per served query)
+    * neither rewrite the registry while other threads analyze plans nor log
+    * a replacement warning per function. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AsciiContainsName, exprs => AsciiContains(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CosineSimName, exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SignBucketName, exprs => SignBucket(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MinHashSigsName, exprs => MinHashSigs(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SimHashName, exprs => SimHashVal(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FingerprintName, exprs => FingerprintMin(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AsciiLowerName, exprs => AsciiLower(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AsciiTokensName, exprs => AsciiTokens(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CompactTokensName, exprs => CompactTokens(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DecodePostingsName, exprs => DecodePostings(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DecodeBlocksName,
-      exprs => DecodePostingsBlocks(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4)),
-      "built-in")
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      builders.foreach { case (name, builder) =>
+        if (!registry.functionExists(FunctionIdentifier(name)))
+          registry.createOrReplaceTempFunction(name, builder, "built-in")
+      }
+    }
   }
 
   /** `ascii_lower(c)` — caller must have [[register]]ed on the session that

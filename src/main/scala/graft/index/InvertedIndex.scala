@@ -47,11 +47,9 @@ final case class SegmentRow(term: String, salt: Long, seg: Array[Byte], n: Long)
 object InvertedIndex {
   val ChunkSize = 1 << 17
 
-  /** Byte bound per chunk payload, cut at block granularity (see
-    * PostingCodec.mergeStreams). At the defaults the posting count already
-    * keeps a chunk below it: a posting is at most 19 varint bytes, so
-    * ChunkSize postings take at most ~2.5 MB. It is also the parquet
-    * row-group size of the index write. */
+  /** Parquet row-group size of the index write: one row group holds about
+    * one chunk row (ChunkSize postings of at most 19 varint bytes each take
+    * at most ~2.5 MB). */
   val ChunkTargetBytes: Int = 4 << 20
 
   /** index rows from the compact posting stream (doc_id, term, tf, len)
@@ -204,25 +202,24 @@ object InvertedIndex {
     * build never emits those; reachable only via hand-built segments). */
   private[index] def termChunkRows(term: String, df: Long,
       runs: Seq[Array[Byte]], avgdl: Double,
-      chunkSize: Int = ChunkSize,
-      chunkBytes: Int = ChunkTargetBytes): Iterator[IndexRow] = {
+      chunkSize: Int = ChunkSize): Iterator[IndexRow] = {
     def rows(df: Long, outs: Array[PostingCodec.ChunkOut]) =
       outs.iterator.zipWithIndex.map { case (c, i) =>
         IndexRow(term, df, i, c.first_doc_id, c.last_doc_id, c.n,
           c.blocks.map(_.max_weight).max, c.blocks, c.bytes)
       }
     try rows(df, PostingCodec.mergeStreams(runs, avgdl, Stats.K1, Stats.B,
-      chunkSize, chunkBytes))
+      chunkSize))
     catch {
       case _: IllegalArgumentException =>
         // non-disjoint runs (hand-built segments only): object-path k-way
         // merge, then re-encode as ONE run and reuse the SAME streaming
-        // chunk emitter — both paths share the count+byte cut logic, so
+        // chunk emitter — both paths share the chunk cut logic, so
         // they stay byte-identical by construction
         val merged = PostingCodec.mergeRuns(runs.map(PostingCodec.decode))
         val (bytes, _) = PostingCodec.encode(merged, avgdl, Stats.K1, Stats.B)
         rows(merged.length.toLong, PostingCodec.mergeStreams(
-          Seq(bytes), avgdl, Stats.K1, Stats.B, chunkSize, chunkBytes))
+          Seq(bytes), avgdl, Stats.K1, Stats.B, chunkSize))
     }
   }
 

@@ -159,10 +159,9 @@ object PostingCodec {
     * cursor (primitives only) and chunks are emitted as soon as they fill,
     * so live memory is one chunk's buffers regardless of df.
     *
-    * A chunk closes at `chunkSize` postings, or at the first BLOCK boundary
-    * where its payload reaches `chunkBytes`: every non-final chunk's posting
-    * count stays a multiple of [[BlockSize]], so Σ blocks per term remains
-    * ceil(df/BlockSize) regardless of where the byte bound cuts.
+    * A chunk closes at `chunkSize` postings. A posting is at most 19 varint
+    * bytes, so at the default `ChunkSize` a chunk payload stays below
+    * ~2.5 MB without a separate byte bound.
     *
     * Requires runs pairwise doc-disjoint after ordering by first doc_id
     * (the salted doc_id-range build guarantees this); throws
@@ -170,8 +169,7 @@ object PostingCodec {
     * object path ([[mergeRuns]] + [[encode]]).
     */
   def mergeStreams(runs0: Seq[Array[Byte]], avgdl: Double,
-                   k1: Double, b: Double, chunkSize: Int,
-                   chunkBytes: Int = Int.MaxValue): Array[ChunkOut] = {
+                   k1: Double, b: Double, chunkSize: Int): Array[ChunkOut] = {
     val runs = runs0.filter(_.nonEmpty).sortBy { seg =>
       new Reader(seg, 0).readVLong() - 1 // first doc = gap + (-1)
     }
@@ -201,7 +199,6 @@ object PostingCodec {
     }
     def add(doc: Long, tf: Int, len: Int): Unit = {
       if (chunkN == chunkSize) flushChunk()
-      else if (blockN == BlockSize && out.length >= chunkBytes) flushChunk()
       if (blockN == BlockSize) flushBlock()
       if (chunkN == 0) { chunkFirst = doc; chunkPrev = -1L }
       if (blockN == 0) blockOffset = out.length

@@ -231,11 +231,13 @@ object Dedup {
       s"clusters: min-label propagation did not converge in $maxIter " +
         "rounds (component diameter exceeds maxIter); raise maxIter or " +
         "use the large-star/small-star alternation for long-path graphs")
-    // the final round's persisted frame intentionally stays cached: the
-    // returned plan projects it, and unpersisting here would force a full
-    // recompute of the whole iteration chain on first use
-    lab.select(col("v").as("doc_id"), col("lab").as("cluster_id"))
-      .orderBy("doc_id")
+    // the labels are materialized off the cached final round, which is then
+    // dropped: the returned plan reads the local checkpoint (released with
+    // the frame), never the whole iteration chain and never a cache entry
+    val labels = lab.select(col("v").as("doc_id"), col("lab").as("cluster_id"))
+      .localCheckpoint()
+    if (prev != null) prev.unpersist()
+    labels.orderBy("doc_id")
   }
 
   /** Dedup filter: keep ONE representative (min doc_id) per near-dup

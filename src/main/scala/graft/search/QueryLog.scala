@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 import graft.analyze.Analyzer
 
 /** Real query-log sink + suggestions (SURVEY.md §2.1 S10, §2.4 A11, §2.6 O3).
@@ -17,8 +18,16 @@ import graft.analyze.Analyzer
   * conflict-free across 1000 executors, and the counter is the groupBy-count
   * view [[counts]], computed at read time or compacted periodically). Empty
   * and normalize-to-empty queries are skipped exactly like the reference.
+  *
+  * A serving session batches its queries in memory before [[append]]
+  * (`Serve.Session`): the log holds one file per batch, not per query, and
+  * a session killed without closing loses its unwritten batch.
   */
 object QueryLog {
+
+  /** The log table's columns. */
+  private val Schema: StructType = new StructType()
+    .add("query", StringType).add("normalized", StringType)
 
   /** Query normalization for the log: the simple analyzer's token stream,
     * space-joined ("Spark  SQL!" → "spark sql"). */
@@ -42,10 +51,11 @@ object QueryLog {
   }
 
   /** Load the append log back through the same table seam as [[append]] —
-    * a non-parquet TableIO must round-trip (ADVICE r2). */
+    * a non-parquet TableIO must round-trip (ADVICE r2). Read with the
+    * explicit [[Schema]], so a log with no batch yet is an empty table. */
   def load(spark: SparkSession, path: String,
            io: graft.sources.TableIO = graft.sources.ParquetTableIO): DataFrame =
-    io.read(spark, path)
+    io.read(spark, path, Some(Schema))
 
   /** A11: the reference's `$inc count` upsert counter as a groupBy-count
     * view over the append log: (query, normalized, cnt). */

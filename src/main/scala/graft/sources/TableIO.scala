@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Thin table-I/O seam between the engine and the table format (SURVEY.md
   * §7.1 step 1). The north rule names Iceberg tables; this sandbox has no
@@ -12,8 +13,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * change for every caller, no engine edits.
   */
 trait TableIO {
-  /** Read the table's current snapshot. */
-  def read(spark: SparkSession, table: String): DataFrame
+  /** Read the table's current snapshot; with a `schema`, an empty table
+    * reads as an empty frame instead of failing schema inference. */
+  def read(spark: SparkSession, table: String,
+           schema: Option[StructType] = None): DataFrame
 
   /** Atomically replace the table's content (write-audit-publish).
     * `options` are format-layer hints (e.g. parquet row-group size for the
@@ -34,8 +37,9 @@ trait TableIO {
 /** Parquet-directory implementation: a "table" is a directory path; commits
   * are Hadoop-committer-atomic part-file sets. */
 object ParquetTableIO extends TableIO {
-  def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(table)
+  def read(spark: SparkSession, table: String,
+           schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(table)
 
   def overwrite(df: DataFrame, table: String,
                 options: Map[String, String] = Map.empty): Unit =

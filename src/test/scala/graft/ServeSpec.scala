@@ -1,7 +1,11 @@
 package graft
 
 import graft.corpus.Corpus
-import java.nio.file.Files
+import graft.search.QueryLog
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, ConcurrentHashMap, Executors}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import scala.jdk.CollectionConverters._
 
 class ServeSpec extends SparkSpec {
 
@@ -63,5 +67,102 @@ class ServeSpec extends SparkSpec {
         assert(inj.startsWith("[") && !inj.contains("\"cnt\":"))
       } finally server.stop(0)
     } finally s.close()
+  }
+
+  test("HTTP front: concurrent GETs equal sequential answers, suggestions " +
+      "count every query, the pool stays bounded") {
+    val dir = Files.createTempDirectory("graft-serve-conc").toString
+    val files = Corpus.files(spark, "/root/testdata/sf0.001")
+    checkpoint.CheckpointedBuild.run(files, dir, nBuckets = 2)
+    val logPath = s"$dir/querylog"
+    val s = new Serve.Session(spark, dir, files, logPath)
+    val queries = Seq("merge sort window", "merge join", "hash join scan",
+      "\"hash join\"", "window agg")
+    val prefixes = Seq("merge", "hash", "window")
+    val sent = new ConcurrentHashMap[String, AtomicInteger]()
+    def note(q: String): Unit =
+      sent.computeIfAbsent(q, _ => new AtomicInteger()).incrementAndGet()
+    def body(rows: Seq[String]) = rows.mkString("[", ",", "]")
+    // the sequential answers, through the line protocol (these log too)
+    val want = queries.flatMap { q =>
+      note(q); note(q)
+      Seq(("search", q) -> body(s.handle(q)),
+        ("page", q) -> body(s.handle(s":page 2 3 $q")))
+    }.toMap
+    val server = HttpServe.start(s, 0)
+    val port = server.getAddress.getPort
+    val parallelism = spark.sparkContext.defaultParallelism
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala
+      .count(_.getName.startsWith(s"graft-http-$port-"))
+    val maxThreads = new AtomicInteger()
+    val sampling = new AtomicBoolean(true)
+    val sampler = new Thread(() => while (sampling.get) {
+      maxThreads.accumulateAndGet(poolThreads, math.max)
+      Thread.sleep(2)
+    })
+    sampler.start()
+    def get(pathQ: String): (Int, String) = {
+      val c = java.net.URI.create(s"http://127.0.0.1:$port$pathQ").toURL
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      try (c.getResponseCode, new String(c.getInputStream.readAllBytes(), "UTF-8"))
+      finally c.disconnect()
+    }
+    def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
+    val clients = Executors.newFixedThreadPool(4)
+    try {
+      val results = clients.invokeAll((0 until 4).map { c =>
+        (() => (0 until 6).map { j =>
+          val q = queries((c + j) % queries.length)
+          (c + j) % 3 match {
+            case 0 => note(q); ("search", q) -> get(s"/search?query=${enc(q)}")
+            case 1 => note(q); ("page", q) -> get(s"/search?query=${enc(q)}&page=2&limit=3")
+            case _ =>
+              val p = prefixes((c + j) % prefixes.length)
+              ("suggest", p) -> get(s"/suggest?prefix=$p")
+          }
+        }): Callable[Seq[((String, String), (Int, String))]]
+      }.asJava).asScala.flatMap(_.get)
+      sampling.set(false)
+      sampler.join()
+      assert(results.length === 24)
+      results.foreach { case (key, (code, b)) =>
+        assert(code === 200, key)
+        if (key._1 == "suggest") assert(b.startsWith("[") && b.endsWith("]"), b)
+        else assert(b === want(key), key)
+      }
+      // suggestions count every query sent before them, none lost or
+      // doubled by concurrent batches
+      val counts = sent.asScala.map { case (q, n) => q -> n.get.toLong }.toMap
+      def suggested(sess: Serve.Session, prefix: String) =
+        sess.suggest(prefix).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      prefixes.foreach { p =>
+        assert(suggested(s, p) === counts.filter { case (q, _) =>
+          QueryLog.normalize(q).startsWith(p) }, p)
+      }
+      assert(maxThreads.get <= parallelism, maxThreads.get)
+      assert(maxThreads.get >= 2, "requests never ran on the pool")
+    } finally {
+      sampling.set(false)
+      clients.shutdownNow()
+      server.stop(0)
+      s.close()
+    }
+    // the closed session's log holds every query
+    val s2 = new Serve.Session(spark, dir, files, logPath)
+    try assert(s2.suggest("").collect().map(r => r.getString(0) -> r.getLong(1)).toMap ===
+      sent.asScala.map { case (q, n) => q -> n.get.toLong }.toMap)
+    finally s2.close()
+    // a session that logged nothing has a readable, empty log
+    val emptyLog = s"$dir/emptylog"
+    val s3 = new Serve.Session(spark, dir, files, emptyLog)
+    try {
+      assert(Files.isDirectory(Paths.get(emptyLog)))
+      assert(s3.suggest("merge").collect().isEmpty)
+      assert(QueryLog.load(spark, emptyLog).count() === 0L)
+    } finally s3.close()
+    // idle pool threads retire: the stopped server leaves none behind
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (poolThreads > 0 && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(poolThreads === 0)
   }
 }

@@ -13,6 +13,21 @@ class FusedExprSpec extends SparkSpec {
   private val rnd = new scala.util.Random(42)
   graft.functions.GraftFunctions.register(spark)
 
+  test("register is a no-op once the session holds the functions") {
+    val registry = spark.sessionState.functionRegistry
+    // each registration stores a new ExpressionInfo next to the builder
+    def entries = GraftFunctions.Names.map { n =>
+      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(n)
+      (registry.lookupFunction(id), registry.lookupFunctionBuilder(id))
+    }
+    val before = entries
+    assert(before.forall { case (i, b) => i.isDefined && b.isDefined })
+    GraftFunctions.register(spark)
+    // the very same entries: nothing was re-created or replaced
+    assert(entries.zip(before).forall { case ((i, b), (i0, b0)) =>
+      (i.get eq i0.get) && (b.get eq b0.get) })
+  }
+
   test("CosineSim == aggregate/zip_with HOF fold, bit-for-bit") {
     val rows = (0L until 200L).map { i =>
       val d = 1 + rnd.nextInt(64)

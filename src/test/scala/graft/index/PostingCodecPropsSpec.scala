@@ -85,18 +85,6 @@ class PostingCodecPropsSpec extends AnyFunSuite {
     })
   }
 
-  test("property: mergeStreams byte bound cuts chunks only at block ends") {
-    check("mergeStreams bytes")(Prop.forAll(genPostings, Gen.chooseNum(1, 8),
-        Gen.chooseNum(1, 4000)) { (ps, k, chunkBytes) =>
-      val runs = ps.grouped(math.max(1, ps.length / k + 1)).toSeq
-        .map(encode(_, 100.0, 1.2, 0.75)._1)
-      val got = mergeStreams(runs, 100.0, 1.2, 0.75, 1 << 17, chunkBytes)
-      got.flatMap(c => decode(c.bytes)).toSeq == ps.toSeq &&
-        got.dropRight(1).forall(c => c.n % BlockSize == 0 &&
-          c.bytes.length >= chunkBytes && c.blocks.last.offset < chunkBytes)
-    })
-  }
-
   test("mergeStreams rejects interleaved (non-disjoint) runs") {
     val a = Array(Posting(1L, 1, 10), Posting(5L, 1, 10))
     val b = Array(Posting(3L, 1, 10))

@@ -45,22 +45,43 @@ class OpsSpec extends SparkSpec {
     assert(reps === Set(1L, 4L, 5L, 7L, 10L))
   }
 
+  /** Persisted RDDs once unreachable frames are collected: a local
+    * checkpoint is released with the frame that reads it (the context holds
+    * persisted RDDs weakly), a cached Dataset never is. Collects three
+    * times, then polls until the count is at most `atMost`, or 30 s have
+    * passed. */
+  private def persistedAfterGc(atMost: Int = Int.MaxValue): Int = {
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    var n = spark.sparkContext.getPersistentRDDs.size
+    var rounds = 0
+    while ((n > atMost || rounds < 3) && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(50)
+      n = spark.sparkContext.getPersistentRDDs.size
+      rounds += 1
+    }
+    n
+  }
+
   test("clusters: long path converges to one component; empty pairs is empty") {
     // diameter-5 path — forces several propagation rounds before fixpoint
     val chain = (1L to 6L).sliding(2).map(s => (s(0), s(1))).toSeq
       .toDF("doc_a", "doc_b")
+    val cached = persistedAfterGc()
     val cl = Dedup.clusters(chain).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(cl.toMap === (1L to 6L).map(_ -> 1L).toMap)
+    // the converging call leaves no cached frame behind either
+    assert(persistedAfterGc(cached) <= cached)
     val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     assert(Dedup.clusters(empty).isEmpty)
     // non-convergence within maxIter must fail loudly, never return a
     // silently-truncated (wrong) labeling
-    val cached = spark.sparkContext.getPersistentRDDs.size
+    val before = persistedAfterGc()
     val ex = intercept[IllegalArgumentException](Dedup.clusters(chain, maxIter = 2))
     assert(ex.getMessage.contains("did not converge"))
     // the failed call leaves no cached frame behind
-    assert(spark.sparkContext.getPersistentRDDs.size === cached)
+    assert(spark.sparkContext.getPersistentRDDs.size === before)
   }
 
   test("simhash: identical docs get identical hashes; hash is stable") {
